@@ -150,19 +150,16 @@ object Queries4 {
   // groovy:2447-2512) — sprawl_areas / sprawl_distances (here) and
   // grid_sprawl_indicators (Queries6) are three EXPORTS of that one run:
   // memoize it per session (fixture-driven, dir-independent), the same
-  // compute-once-export-N-times pattern as Queries6.e2eCache. Returns
+  // compute-once-export-N-times pattern as Queries6.e2eChain. Returns
   // (grid with distance columns, sprawl layer).
-  private val sprawlRunCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, (DataFrame, DataFrame)]()
-  private[graft] def sprawlRun(s: SparkSession): (DataFrame, DataFrame) = {
-    sprawlRunCache.keySet.removeIf(k => k.sparkContext.isStopped)
-    sprawlRunCache.computeIfAbsent(s, _ => {
+  private val sprawlRunMemo = new SessionMemo[Unit, (DataFrame, DataFrame)]()
+  private[graft] def sprawlRun(s: SparkSession): (DataFrame, DataFrame) =
+    sprawlRunMemo(s, ()) {
       val (gi, sprawl, _) = graft.workflow.WorkflowRunner.sprawlIndicators(
         s, sprawlGrid(s), Seq("URBAN_SPRAWL_AREAS", "URBAN_SPRAWL_DISTANCES",
           "URBAN_SPRAWL_COOL_DISTANCES"), 15.0, grid, Res)
       (gi.localCheckpoint(), sprawl.get)
-    })
-  }
+    }
 
   // ---- exact-SVF scene: 4 RSU squares 100x100 at 120 spacing, 12 strictly
   // interior non-overlapping buildings each (rays DO cross into neighbour

@@ -24,14 +24,12 @@ object Queries5 {
 
   // ---- shared RF training scene (rf_train_apply + rf_persist_apply) -------
   // Training is deterministic (integer split statistics, keyed mtry draws),
-  // so the two queries share one trained pair per session; entries of
-  // stopped sessions are evicted lazily (same pattern as Queries6.e2eCache).
-  private val forestCache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, (graft.ml.RandomForest.Forest, graft.ml.RandomForest.Forest)]()
+  // so the two queries share one trained pair per session (SessionMemo).
+  private val forestMemo =
+    new SessionMemo[Unit, (graft.ml.RandomForest.Forest, graft.ml.RandomForest.Forest)]()
 
-  private def trainedForests(s: SparkSession): (graft.ml.RandomForest.Forest, graft.ml.RandomForest.Forest) = {
-    forestCache.keySet.removeIf(_.sparkContext.isStopped)
-    forestCache.computeIfAbsent(s, { _ =>
+  private def trainedForests(s: SparkSession): (graft.ml.RandomForest.Forest, graft.ml.RandomForest.Forest) =
+    forestMemo(s, ()) {
       val trainGrid = s.range(0, 1024).select(
         (col("id") % 16 + 1).cast("double").as("x1"),
         (floor(col("id") / 16) % 8 + 1).cast("double").as("x2"),
@@ -48,8 +46,7 @@ object Queries5 {
       val reg = graft.ml.RandomForestTrainer.train(trainGrid, Seq("x1", "x2"), "yr",
         numTrees = 1, maxDepth = 6, numClasses = 0)
       (cls, reg)
-    })
-  }
+    }
 
   // ---- SQL emitters for the first-match-wins rule tables ------------------
 

@@ -291,21 +291,10 @@ object Queries6 {
   // reference computes the chain once and writes three tables) — memoize
   // the checkpointed AllIndicators per (session, dir) so the driver's
   // query loop pays the chain once, not three times.
-  private val e2eCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      graft.workflow.WorkflowChain.AllIndicators]()
-  private val heightCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  /** Drop entries of stopped sessions so a long-lived embedding never pins
-    * checkpoint RDD references past the owning session's lifetime (entries
-    * are evicted lazily, on the next cache access from ANY session). */
-  private def evictStopped(): Unit = {
-    e2eCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    heightCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-  }
-  private def e2eChain(s: SparkSession, dir: String): graft.workflow.WorkflowChain.AllIndicators = {
-    evictStopped()
-    e2eCache.computeIfAbsent((s, dir), { _ =>
+  private val e2eMemo = new SessionMemo[String, graft.workflow.WorkflowChain.AllIndicators]()
+  private val heightMemo = new SessionMemo[String, DataFrame]()
+  private def e2eChain(s: SparkSession, dir: String): graft.workflow.WorkflowChain.AllIndicators =
+    e2eMemo(s, dir) {
       val p = WorkflowConfig.Defaults.copy(indicatorUse = Seq("LCZ", "UTRF", "TEB"),
         surfaceVegetation = 1e6, surfaceHydro = 1e6, svfSimplified = true)
       val all = graft.workflow.WorkflowChain.computeAllGeoIndicators(s, e2eLayers(s, dir), p,
@@ -313,8 +302,7 @@ object Queries6 {
       all.copy(buildingIndicators = all.buildingIndicators.localCheckpoint(),
         blockIndicators = all.blockIndicators.map(_.localCheckpoint()),
         rsuIndicators = all.rsuIndicators.localCheckpoint())
-    })
-  }
+    }
 
   /** Oracle cells keyed by the chain's minted TSU ids. */
   private val rcellsSql =
@@ -486,11 +474,10 @@ object Queries6 {
         surfaceVegetation = 1e6, surfaceHydro = 1e6, svfSimplified = true)
       // memoized like e2eChain: the estimation branch runs its own
       // UTRF-gated chain, so warm+timed bench runs would pay it twice
-      evictStopped()
-      val building = heightCache.computeIfAbsent((s, dir), { _ =>
+      val building = heightMemo(s, dir) {
         WorkflowChain.estimateBuildingHeight(s,
           e2eLayers(s, dir), estimate, forest, p, grid, Res)._1.localCheckpoint()
-      })
+      }
       building.select(col("id_build"),
           round(col("height_wall"), 9).as("height_wall"),
           round(col("height_roof"), 9).as("height_roof"),

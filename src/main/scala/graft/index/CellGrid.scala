@@ -125,22 +125,26 @@ final case class CellGrid(minX: Double, minY: Double, worldSize: Double) {
     out.result()
   }
 
-  /** All cells at `res` intersecting the envelope. */
-  def coverEnvelope(e: Envelope, res: Int): Array[Long] = {
-    val cs = cellSize(res)
-    val x0 = clampIdx(math.floor((e.getMinX - minX) / cs).toLong, res)
-    val x1 = clampIdx(math.floor((e.getMaxX - minX) / cs).toLong, res)
-    val y0 = clampIdx(math.floor((e.getMinY - minY) / cs).toLong, res)
-    val y1 = clampIdx(math.floor((e.getMaxY - minY) / cs).toLong, res)
-    val out = new Array[Long](((x1 - x0 + 1) * (y1 - y0 + 1)).toInt)
-    var i = 0; var iy = y0
-    while (iy <= y1) {
-      var ix = x0
-      while (ix <= x1) { out(i) = encode(ix, iy, res); i += 1; ix += 1 }
-      iy += 1
+  /** All cells at `res` intersecting the envelope; none for a null
+    * envelope (an empty geometry's), whose min > max would otherwise give
+    * negative extents with a positive product. */
+  def coverEnvelope(e: Envelope, res: Int): Array[Long] =
+    if (e.isNull) Array.emptyLongArray
+    else {
+      val cs = cellSize(res)
+      val x0 = clampIdx(math.floor((e.getMinX - minX) / cs).toLong, res)
+      val x1 = clampIdx(math.floor((e.getMaxX - minX) / cs).toLong, res)
+      val y0 = clampIdx(math.floor((e.getMinY - minY) / cs).toLong, res)
+      val y1 = clampIdx(math.floor((e.getMaxY - minY) / cs).toLong, res)
+      val out = new Array[Long](((x1 - x0 + 1) * (y1 - y0 + 1)).toInt)
+      var i = 0; var iy = y0
+      while (iy <= y1) {
+        var ix = x0
+        while (ix <= x1) { out(i) = encode(ix, iy, res); i += 1; ix += 1 }
+        iy += 1
+      }
+      out
     }
-    out
-  }
 
   /** Fixed-res cover of a geometry: bbox cells refined to those actually
     * intersecting the geometry (candidate-pruning cover; false positives

@@ -46,7 +46,7 @@ object ConnectedComponents {
       // pointer-jumping: component := label(component) (labels are vertex
       // ids). The jump deliberately reads THIS round's stepped labels (the
       // "fresh" jump), which costs a second materialization per round.
-      // Round-7 A/B (GRAFT_CC_DEBUG round counts on the blocks / TSU-veg /
+      // Round-7 A/B (round counts on the blocks / TSU-veg /
       // TSU-water fixture graphs): jumping through the PREVIOUS round's
       // checkpointed labels (classic parent-pointer, 1 materialization per
       // round) adds +1 round on the chain-shaped graphs (2→3, 3→4), and a
@@ -62,7 +62,6 @@ object ConnectedComponents {
       labels = compressed.drop("old")
       iter += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG")) println(s"CC_ROUNDS $iter")
     labels
   }
 

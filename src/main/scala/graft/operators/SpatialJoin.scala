@@ -92,8 +92,6 @@ object SpatialJoin {
       cands.map(id => (id,
         !grid.isBorderCell(id) && prep.containsProperly(grid.boundsGeom(id))))
     }
-  def compactCoverUdf(grid: CellGrid, res: Int, minRes: Int) =
-    udf((wkb: Array[Byte]) => grid.compactCover(Geo.fromWkb(wkb), res, minRes))
   def cellUdf(grid: CellGrid, res: Int) =
     udf((x: Double, y: Double) => grid.cell(x, y, res))
   def radiusCellsUdf(grid: CellGrid, res: Int, r: Double) =

@@ -28,6 +28,14 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("BroadcastNestedLoopJoin"))
   }
 
+  test("Probe.run smoke: rows match the query's count, its jobs are observed") {
+    val Seq(r) = Probe.run(spark, dir, Seq("geo_pip_join"))
+    assert(r.query == "geo_pip_join")
+    assert(r.rows == SparkEntry.queries("geo_pip_join")(spark, dir).count())
+    assert(r.jobs.nonEmpty, r)
+    assert(r.constructS >= 0 && r.actionS > 0)
+  }
+
   test("q2_join_topk: dimension table broadcast") {
     assert(plan("q2_join_topk").contains("BroadcastHashJoin"))
   }

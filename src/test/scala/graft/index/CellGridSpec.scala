@@ -64,6 +64,16 @@ class CellGridSpec extends AnyFunSuite {
     assert(compactLeaves.contains(g.cell(100.0, 60.0, res)))
   }
 
+  test("empty geometry: null envelope covers no cell at any resolution") {
+    val empty = Geo.fromWkt("POLYGON EMPTY")
+    assert(empty.getEnvelopeInternal.isNull)
+    for (res <- Seq(16, 20)) {
+      assert(g.coverEnvelope(empty.getEnvelopeInternal, res).isEmpty, s"res $res")
+      assert(g.cover(empty, res).isEmpty, s"res $res")
+    }
+    assert(g.compactCover(empty, 16).isEmpty)
+  }
+
   test("compact cover is smaller than fixed cover for large polygons") {
     val poly = Geo.fromWkt("POLYGON((0 0, 2000 0, 2000 2000, 0 2000, 0 0))")
     assert(g.compactCover(poly, 14).length < g.cover(poly, 14).length)

@@ -53,6 +53,26 @@ class PipelineOpsSpec extends SparkTestBase {
     got.foreach { case (k2, j) => assert(math.abs(j - expected(k2)) < 1e-12) }
   }
 
+  test("ngramJaccardPairs maxDf cap: hot shingles bounded, surviving pairs exact") {
+    import spark.implicits._
+    // one ubiquitous suffix gives two trigrams df = N: uncapped, every pair
+    // of the corpus shares them; the cap drops them from the postings while
+    // the verify stage keeps the jaccard of every surviving pair exact
+    val hot = docs.withColumn("text", concat(col("text"), lit(" zzqa zzqb zzqc zzqd")))
+    def pairs(maxDf: Option[Int]): Map[(Long, Long), Double] =
+      Dedup.ngramJaccardPairs(hot, "doc_id", "text", k = 3, threshold = 0.0, maxDf = maxDf)
+        .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect()
+        .map { case (a, b, j) => (a, b) -> j }.toMap
+    val uncapped = pairs(None)
+    val capped = pairs(Some(8))
+    val n = docs.count()
+    assert(uncapped.size == n * (n - 1) / 2)
+    assert(capped.nonEmpty && capped.size < uncapped.size)
+    capped.foreach { case (p, j) => assert(uncapped.get(p).contains(j), s"pair $p") }
+    val planted = (0L until 10L).map(i => (i, 100L + i)) ++ Seq((0L, 200L), (1L, 201L))
+    planted.foreach(p => assert(capped.get(p).exists(_ >= 0.8), s"lost planted $p"))
+  }
+
   test("minhashLsh: near-certain recall at j>=0.8 (16 bands x 2 rows), exact precision") {
     import spark.implicits._
     val brute = bruteJaccard(3)
