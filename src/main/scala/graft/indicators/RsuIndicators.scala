@@ -216,7 +216,7 @@ object RsuIndicators {
     layerBounds.zipWithIndex.foldLeft(out) { case (df, ((lo, hi), i)) =>
       df.withColumn(
         s"roof_fraction_distribution_h${fmt(lo)}_${fmt(hi)}",
-        coalesce(col(s"__l_$i") / col("__tot"), lit(0.0)))
+        coalesce(try_divide(col(s"__l_$i"), col("__tot")), lit(0.0)))
         .drop(s"__l_$i")
     }.drop("__tot")
   }

@@ -1,27 +1,43 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.ParquetFileWriter.Mode
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.MessageTypeParser
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import java.nio.charset.StandardCharsets
+import java.net.URI
 
 /**
  * Iceberg-style table layer over Parquet: versioned snapshots with an atomic
- * pointer file, per-partition lineage + metrics, resume-from-checkpoint and
+ * pointer file, per-file lineage + metrics, resume-from-checkpoint and
  * TIME TRAVEL (north rule: "every stage persists per-partition lineage +
  * metrics ... so runs resume from checkpoint"). No Iceberg runtime jar ships
  * offline (BASELINE.md note), so the manifest is a small self-written JSON.
  *
  * Layout under `root/<stage>/`:
  *   data-v<N>/        parquet files of snapshot N (immutable once committed)
- *   lineage-v<N>/     parquet: one row per output file with row count +
- *                     bytes (per-partition lineage + metrics)
+ *   lineage-v<N>/     one parquet file: one row per written data file of
+ *                     snapshot N (`file`, `bytes`, `rows`, `stage`), zero-row
+ *                     files included; `file` is the URL-encoded path that
+ *                     `_metadata.file_path` reports for that file
  *   manifest.json     CURRENT-snapshot pointer (written last, atomic rename
  *                     => a crash mid-write never leaves a readable-but-
- *                     uncommitted stage)
+ *                     uncommitted stage); its rows/files/bytes are the
+ *                     lineage sums
  *   snapshots.jsonl   append-only snapshot log (one JSON line per commit) —
  *                     old snapshots stay readable: `readSnapshot(root,
  *                     stage, version)` time-travels.
+ *
+ * Lineage comes from the writer, as Iceberg's manifest writer records file
+ * stats: the committing driver lists the snapshot's data files and reads
+ * each file's row count from its Parquet footer, then writes the lineage
+ * file itself. A commit therefore runs one Spark job, the data write.
  *
  * The reference has no retry/resume (failure anywhere = exception, SURVEY
  * §3.3); this layer adds it: `stage(...)` recomputes only stages whose
@@ -79,33 +95,61 @@ object Lake {
       }
   }
 
+  private val lineageSchema = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary file (STRING);
+      |  required int64 bytes;
+      |  required int64 rows;
+      |  required binary stage (STRING);
+      |}""".stripMargin)
+
+  /** A file's path as `_metadata.file_path` reports it: URL-encoded, and
+    * `file:/…` rather than the `file:///…` of a local listing's `toUri`. */
+  private def filePath(p: Path): String = {
+    val u = p.toUri
+    new URI(u.getScheme, Option(u.getAuthority).filter(_.nonEmpty).orNull, u.getPath, null, null).toString
+  }
+
+  /** Writes the one-file lineage of a snapshot from its data files' listing
+    * and footers (Spark's hidden `_`/`.` files skipped) and returns the
+    * manifest sums (rows, files, bytes). */
+  private def writeLineage(spark: SparkSession, dataPath: String, lineageDir: String,
+                           name: String): (Long, Int, Long) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val listing = new Path(dataPath).getFileSystem(conf).listFiles(new Path(dataPath), true)
+    val files = Iterator.continually(listing).takeWhile(_.hasNext).map(_.next())
+      .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+      .toSeq
+    val rows = files.map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try r.getRecordCount finally r.close()
+    }
+    val dir = new Path(lineageDir)
+    dir.getFileSystem(conf).delete(dir, true)
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new Path(dir, "part-00000.parquet"), conf))
+      .withType(lineageSchema).withConf(conf).withWriteMode(Mode.OVERWRITE).build()
+    val groups = new SimpleGroupFactory(lineageSchema)
+    try files.zip(rows).foreach { case (st, n) =>
+      w.write(groups.newGroup().append("file", filePath(st.getPath))
+        .append("bytes", st.getLen).append("rows", n).append("stage", name))
+    } finally w.close()
+    (rows.sum, files.length, files.map(_.getLen).sum)
+  }
+
+  /** Commits a snapshot with one Spark job (the data write): lineage comes
+    * from the written files' footers, and the read-back takes the computed
+    * data schema, so it needs no inference job. */
   private def commitStage(spark: SparkSession, root: String, name: String,
                           partitionCols: Seq[String])(compute: => DataFrame): DataFrame = {
     if (isCommitted(root, name)) return read(spark, root, name)
     val version = snapshots(root, name).map(_._1).maxOption.getOrElse(0) + 1
     val dataPath = s"$root/$name/data-v$version"
-    val writer = compute.write.mode("overwrite")
+    val df = compute
+    val writer = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(dataPath)
-    val back = spark.read.parquet(dataPath)
-    // per-partition (per-file) lineage + metrics, harvested from the hidden
-    // _metadata column (file-granular; at real cluster scale this comes from
-    // the commit protocol's task stats instead of a re-scan). ONE distributed
-    // pass collects the per-file rows (bounded: one row per output file);
-    // the lineage parquet is then written from the collected local relation
-    // and the manifest stats are summed in-driver — the pre-r7 form re-scanned
-    // the full stage data to write lineage AND re-read the lineage for stats
-    // (2 extra jobs + a second full-data pass per stage).
-    val lineageRows = back
-      .groupBy(col("_metadata.file_path").as("file"), col("_metadata.file_size").as("bytes"))
-      .agg(count(lit(1)).as("rows"))
-      .collect()
-    spark.createDataFrame(lineageRows.toSeq.map(r =>
-        (r.getString(0), r.getLong(1), r.getLong(2))))
-      .toDF("file", "bytes", "rows").withColumn("stage", lit(name))
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/$name/lineage-v$version")
-    val m = s"""{"stage":"$name","version":$version,"rows":${lineageRows.map(_.getLong(2)).sum},""" +
-      s""""files":${lineageRows.length},"bytes":${lineageRows.map(_.getLong(1)).sum},""" +
+    val (rows, files, bytes) = writeLineage(spark, dataPath, s"$root/$name/lineage-v$version", name)
+    val m = s"""{"stage":"$name","version":$version,"rows":$rows,"files":$files,"bytes":$bytes,""" +
       s""""committedAtMs":${System.currentTimeMillis()}}"""
     // snapshot log first (append), then the pointer (atomic rename = commit)
     Files.write(snapshotsPath(root, name), (m + "\n").getBytes(StandardCharsets.UTF_8),
@@ -115,7 +159,10 @@ object Lake {
     Files.write(tmp, m.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, manifestPath(root, name), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-    back
+    // partition columns stay out of the given schema: their types are then
+    // inferred from the directory names, as a later `read` infers them
+    spark.read.schema(StructType(df.schema.filterNot(f => partitionCols.contains(f.name))))
+      .parquet(dataPath)
   }
 
   /**

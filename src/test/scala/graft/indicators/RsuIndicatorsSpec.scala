@@ -93,4 +93,18 @@ class RsuIndicatorsSpec extends SparkTestBase {
     assert(math.abs(out.getAs[Double]("roof_fraction_distribution_h0_10") - 411.0 / 681) < 1e-9)
     assert(math.abs(out.getAs[Double]("roof_fraction_distribution_h10_20") - 270.0 / 681) < 1e-9)
   }
+
+  test("roofFractionDistributionExact: an RSU met only along its edge gets 0.0, no DIVIDE_BY_ZERO") {
+    import spark.implicits._
+    val geom = graft.geom.GeoFunctions.stGeomFromWkt(col("wkt"))
+    val rsu = Seq((1, "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))")).toDF("id_rsu", "wkt")
+      .select(col("id_rsu"), geom.as("the_geom"))
+    val b = Seq(("POLYGON ((10 0, 20 0, 20 10, 10 10, 10 0))", 8.0)).toDF("wkt", "height_roof")
+      .select(geom.as("the_geom"), col("height_roof"))
+    val out = RsuIndicators.roofFractionDistributionExact(rsu, b,
+      Seq((0.0, 10.0), (10.0, 20.0)), grid, Res).collect()
+    assert(out.length == 1)
+    assert(out.head.getAs[Double]("roof_fraction_distribution_h0_10") == 0.0)
+    assert(out.head.getAs[Double]("roof_fraction_distribution_h10_20") == 0.0)
+  }
 }
