@@ -21,32 +21,48 @@ import org.apache.spark.sql.functions._
  */
 object Curation {
 
-  /** @param maxBucket LSH hot-bucket census cap, passed through to
-    *   [[Dedup.minhashLsh]] — at corpus scale this is load-bearing
-    *   (CorpusProbe measured 201 s uncapped vs 19 s at cap 64 with
-    *   identical output pairs on a boilerplate-heavy 200k-doc corpus);
+  /** Reads the text once: one projection over `docs` computes the
+    * [[Dedup.digest]] triple, the fused shingle/signature kernel and the
+    * fused gate kernel (bit-identical to the Catalyst
+    * langId/qualityScore/tokenCount, TextKernelSpec), and is checkpointed.
+    * Every stage after it works on those attributes: no text rides a join
+    * or a shuffle, and each kernel runs once per document (CurationSpec).
+    * The checkpoint sits on a projection of `docs`, so later joins plan from
+    * a scan-sized estimate and can broadcast (a checkpoint of a join
+    * carries the join's product estimate, and every join after it falls
+    * back to sort-merge, shuffling the shingle arrays).
+    *
+    * @param maxBucket LSH hot-bucket census cap, passed through to
+    *   [[Dedup.lshPairs]] — at corpus scale this is load-bearing
+    *   (historical: the since-deleted CorpusProbe main measured 201 s
+    *   uncapped vs 19 s at cap 64 with identical output pairs on a
+    *   boilerplate-heavy 200k-doc corpus);
     *   None = lossless recall (fixture/oracle default). */
   def curate(docs: DataFrame, idCol: String, textCol: String,
              lang: String, minQuality: Double,
              k: Int = 3, bands: Int = 16, rowsPerBand: Int = 3,
              jaccardThreshold: Double = 0.4,
              maxBucket: Option[Int] = None): DataFrame = {
-    // 1. exact dedup -> representative ids
-    val reps = docs.join(
-      Dedup.exact(docs, idCol, textCol).select(idCol), Seq(idCol))
+    val t = col(textCol)
+    val perDoc = docs
+      .select(Seq(col(idCol).as("id")) ++ Dedup.digest(t) ++ Seq(
+        Dedup.shingleSigUdf(k, bands * rowsPerBand)(t).as("__ss"),
+        TextAnalysis.langQualityTokensUdf(t).as("__g")): _*)
+      .select(Seq(col("id")) ++ Dedup.DigestCols.map(col) ++ Seq(
+        col("__ss._1").as("sh"), col("__ss._2").as("sig"), col("__g._1").as("lang_id"),
+        col("__g._2").as("quality"), col("__g._3").as("n_tokens")): _*)
+      .localCheckpoint()
+    // 1. exact dedup: the min id of each digest group represents it
+    val reps = perDoc.join(
+      perDoc.groupBy(Dedup.DigestCols.map(col): _*).agg(min(col("id")).as("id")),
+      Seq("id"), "left_semi")
     // 2. near-dup pairs among representatives; drop the larger id of each
-    val near = Dedup.minhashLsh(reps, idCol, textCol, k, bands, rowsPerBand,
-      jaccardThreshold, maxBucket)
-    val dropIds = near.select(col("id_b").as(idCol)).distinct()
-    val kept = reps.join(dropIds, Seq(idCol), "left_anti")
-    // 3. language + quality gate — fused single-pass kernel (bit-identical
-    // to the Catalyst langId/qualityScore/tokenCount, TextKernelSpec; the
-    // separate forms cost 5 stopword regex passes + a char-class
-    // regexp_replace + 2 splits per row)
-    kept.select(col(idCol), TextAnalysis.langQualityTokensUdf(col(textCol)).as("__g"))
-      .select(col(idCol), col("__g._1").as("lang_id"),
-        col("__g._2").as("quality"), col("__g._3").as("n_tokens"))
+    val near = Dedup.lshPairs(reps.select("id", "sh", "sig"),
+      bands, rowsPerBand, jaccardThreshold, maxBucket)
+    // 3. language + quality gate
+    reps.join(near.select(col("id_b").as("id")), Seq("id"), "left_anti")
       .where(col("lang_id") === lang && col("quality") >= minQuality)
+      .select(col("id").as(idCol), col("lang_id"), col("quality"), col("n_tokens"))
   }
 
   /**

@@ -29,13 +29,16 @@ object Dedup {
    * is the standard practice for corpus-scale exact dedup.
    */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol),
-        xxhash64(col(textCol)).as("__h"),
-        md5(col(textCol).cast("binary")).as("__m"),
-        length(col(textCol)).as("__len"))
-      .groupBy("__h", "__m", "__len")
+    docs.select(col(idCol) +: digest(col(textCol)): _*)
+      .groupBy(DigestCols.map(col): _*)
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_cnt"))
       .select(idCol, "dup_cnt")
+
+  /** The exact-dedup digest triple of a text, as the [[DigestCols]]
+    * columns — the one definition [[exact]] and Curation.curate group by. */
+  private[operators] def digest(text: Column): Seq[Column] = Seq(
+    xxhash64(text).as("__h"), md5(text.cast("binary")).as("__m"), length(text).as("__len"))
+  private[operators] val DigestCols = Seq("__h", "__m", "__len")
 
   // ---- shingling ----------------------------------------------------------
   /**
@@ -231,20 +234,32 @@ object Dedup {
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  k: Int = 3, bands: Int = 16, rowsPerBand: Int = 3,
                  threshold: Double = 0.5,
-                 maxBucket: Option[Int] = None): DataFrame = {
-    val numHashes = bands * rowsPerBand
+                 maxBucket: Option[Int] = None): DataFrame =
     // materialize the signature table once: the banded self-join would
     // otherwise re-evaluate the shingle + signature kernel on both join
-    // sides. The fused loop UDF computes words→hashes→windows→all
-    // signatures in ONE pass (bit-identical to the Catalyst
-    // shingles/minhashSignature forms — DedupKernelSpec; the interpreted
-    // aggregate HOFs re-walked the shingle array once per hash and were the
-    // single largest job of the curation chain).
-    val withSig = docs
-      .select(col(idCol).as("id"), shingleSigUdf(k, numHashes)(col(textCol)).as("__ss"))
+    // sides. lshPairs filters empty sets AFTER the checkpoint: above the
+    // kernel's projection the optimizer pushes such a filter into the scan
+    // as size(UDF(text)._1) > 0, a second kernel run per document.
+    lshPairs(sigTable(docs, idCol, textCol, k, bands * rowsPerBand).localCheckpoint(),
+      bands, rowsPerBand, threshold, maxBucket)
+
+  /** The (id, sh, sig) table [[minhashLsh]] checkpoints: the fused loop UDF
+    * computes words→hashes→windows→all signatures in ONE pass
+    * (bit-identical to the Catalyst shingles/minhashSignature forms —
+    * DedupKernelSpec; the interpreted aggregate HOFs re-walked the shingle
+    * array once per hash and were the single largest job of the curation
+    * chain). */
+  private[operators] def sigTable(docs: DataFrame, idCol: String, textCol: String,
+                                  k: Int, numHashes: Int): DataFrame =
+    docs.select(col(idCol).as("id"), shingleSigUdf(k, numHashes)(col(textCol)).as("__ss"))
       .select(col("id"), col("__ss._1").as("sh"), col("__ss._2").as("sig"))
-      .where(size(col("sh")) > 0)
-      .localCheckpoint()
+
+  /** Band join + exact-Jaccard verify of [[minhashLsh]] over a materialized
+    * (id, sh, sig) table; documents without a shingle take no part — the
+    * one implementation behind minhashLsh and Curation.curate. */
+  private[operators] def lshPairs(sigs: DataFrame, bands: Int, rowsPerBand: Int,
+                                  threshold: Double, maxBucket: Option[Int]): DataFrame = {
+    val withSig = sigs.where(size(col("sh")) > 0)
     // band join carries IDs ONLY — the shingle arrays (the heavy payload)
     // never ride the band shuffle; they re-attach for the verify stage
     val banded0 = withSig.select(col("id"),
@@ -409,13 +424,11 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.3,
                         maxDf: Option[Int] = None): DataFrame = {
-    val sets = docs.select(col(idCol).as("id"),
-        // fused loop kernel — bit-identical to
-        // array_distinct(shingles(textCol, k)) (DedupKernelSpec)
-        distinctShinglesUdf(k)(col(textCol)).as("sh"))
+    // one materialization feeds postings (+ verify); filtered after it, so
+    // the kernel runs once per document (see minhashLsh)
+    val sets = shingleSets(docs, idCol, textCol, k).localCheckpoint()
       .where(size(col("sh")) > 0)
       .withColumn("sz", size(col("sh")))
-      .localCheckpoint() // one materialization feeds postings (+ verify)
     maxDf match {
       case None =>
         // EXACT path: postings carry (id, sz) only; the intersection size is
@@ -455,6 +468,13 @@ object Dedup {
           .select("id_a", "id_b", "jaccard")
     }
   }
+
+  /** The (id, sh) distinct-shingle table [[ngramJaccardPairs]] checkpoints —
+    * fused loop kernel, bit-identical to array_distinct(shingles(text, k))
+    * (DedupKernelSpec). */
+  private[operators] def shingleSets(docs: DataFrame, idCol: String, textCol: String,
+                                     k: Int): DataFrame =
+    docs.select(col(idCol).as("id"), distinctShinglesUdf(k)(col(textCol)).as("sh"))
 
   /**
    * Cross-document repeated-SPAN removal — the substring-level dedup of

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions._
 
 /**
@@ -96,5 +97,19 @@ class DedupKernelSpec extends SparkTestBase {
     val byId = got.map(r => r.getLong(0) -> r).toMap
     assert(byId(1L).isNullAt(1) && byId(1L).isNullAt(2) && byId(1L).isNullAt(3))
     assert(!byId(2L).isNullAt(1) && !byId(2L).isNullAt(2) && !byId(2L).isNullAt(3))
+  }
+
+  test("minhashLsh / ngramJaccardPairs: the pre-checkpoint frame runs its kernel once per row") {
+    // a filter on the kernel's output placed above its projection is pushed
+    // into the scan as size(UDF(text)...) > 0 — a second kernel run per row
+    // (an RDD source: over a local relation the kernel is folded at planning)
+    import spark.implicits._
+    val src = spark.sparkContext.parallelize(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
+      .toDF("id", "text")
+    for (frame <- Seq(Dedup.sigTable(src, "id", "text", 3, 48), Dedup.shingleSets(src, "id", "text", 3))) {
+      val plan = frame.queryExecution.optimizedPlan
+      assert(plan.collect { case p => p.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum }.sum == 1,
+        plan)
+    }
   }
 }
