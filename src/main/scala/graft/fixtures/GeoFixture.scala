@@ -177,10 +177,6 @@ object GeoFixture {
     import spark.implicits._
     geomify(blocks.toDF("id_block", "wkt"))
   }
-  def blockBuildCorrDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    blockBuildCorr.toDF("id_block", "id_build")
-  }
   def rsuDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
     geomify(rsus.toDF("id_rsu", "wkt", "rsu_area", "rsu_building_density",

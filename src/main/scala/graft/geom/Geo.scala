@@ -30,7 +30,6 @@ object Geo {
   def toWkb(g: Geometry): Array[Byte]   = if (g == null) null else wkbW.get.write(g)
   def fromWkt(s: String): Geometry      = if (s == null) null else wktR.get.read(s)
   def toWkt(g: Geometry): String        = if (g == null) null else wktW.get.write(g)
-  def wktToWkb(s: String): Array[Byte]  = toWkb(fromWkt(s))
 
   def point(x: Double, y: Double): Geometry = factory.createPoint(new Coordinate(x, y))
 

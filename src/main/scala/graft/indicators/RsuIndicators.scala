@@ -56,7 +56,7 @@ object RsuIndicators {
     // distance > snapTol, so ST_Snap leaves it untouched and the
     // ST_INTERSECTS refinement below would reject it anyway — the prefilter
     // is provably output-equivalent to the all-pairs join.
-    val shared = SpatialJoin.candidatesBbox(
+    val shared = SpatialJoin.candidates(
         buildLine.select(col("id_build"), col(idRsu), col("__lg"), col("height_wall")), "__lg",
         bAlias, "__lgb", grid, res, pad = snapTol, keys = Seq(idRsu))
       .where(col("id_build") =!= col("__idb"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -31,11 +31,6 @@ object Pii {
   val EmailToken = "<EMAIL>"
   val IpToken = "<IP>"
   val PhoneToken = "<PHONE>"
-
-  /** Fully-redacted text (email, then IPv4, then phone). */
-  def redact(text: Column): Column =
-    regexp_replace(regexp_replace(regexp_replace(text,
-      EmailPattern, EmailToken), Ipv4Pattern, IpToken), PhonePattern, PhoneToken)
 
   /**
    * Per-document redaction: `redacted` plus `n_emails`/`n_ips`/`n_phones`

@@ -19,9 +19,13 @@ import graft.index.CellGrid
  *    its fixed-res cover and is broadcast when small → ZERO shuffle of the
  *    big table; when large, both sides shuffle on cell id with optional
  *    salting of hot cells (urban hotspots / popular domains, SURVEY §7.4.5);
- *  - duplicate candidate pairs from multi-cell × multi-cell covers are
- *    deduplicated with the reference-point trick (pair kept only in the cell
+ *  - polygon/line × polygon/line pairs come from ONE generator,
+ *    `candidates`: both sides explode to their ENVELOPE covers, which is
+ *    exactly the reference's `&&`. Duplicates from multi-cell × multi-cell
+ *    covers go with the reference-point trick (pair kept only in the cell
  *    that contains the bbox-intersection corner) — no `distinct` shuffle.
+ *    The corner lies in both envelopes, so its cell is in both covers and
+ *    every bbox-intersecting pair survives exactly once.
  */
 object SpatialJoin {
 
@@ -50,28 +54,6 @@ object SpatialJoin {
     val ix = clampIdx((x - grid.minX) / cs)
     val iy = clampIdx((y - grid.minY) / cs)
     lit(res.toLong << 58).bitwiseOR(shiftleft(spread(iy), 1)).bitwiseOR(spread(ix))
-  }
-
-  /**
-   * Data-driven resolution pick: cells sized to ~2x the median geometry
-   * extent of a sample, so covers stay small (1-4 cells/geometry) while
-   * dense layers don't collapse into a handful of shared cells (the
-   * candidate-blowup failure mode: a layer of 2-unit rects under 32-unit
-   * cells costs ~30x more candidate pairs than under 2-unit cells).
-   */
-  def suggestRes(geoms: DataFrame, geomCol: String, grid: CellGrid,
-                 sampleFraction: Double = 0.1, defaultRes: Int = 10): Int = {
-    val extent = udf { (wkb: Array[Byte]) =>
-      val e = Geo.fromWkb(wkb).getEnvelopeInternal
-      math.max(e.getWidth, e.getHeight)
-    }
-    // fixed seed: identical invocations must pick identical resolutions
-    // (join plans should not drift run-to-run on sampling noise)
-    val row = geoms.sample(withReplacement = false, sampleFraction min 1.0, seed = 42L)
-      .select(percentile_approx(extent(col(geomCol)), lit(0.5), lit(1000)))
-      .head()
-    if (row.isNullAt(0)) defaultRes // empty sample: percentile is NULL
-    else grid.resForCellSize(math.max(row.getDouble(0) * 2, grid.cellSize(grid.maxRes)))
   }
 
   /** cover(geom,res) as a UDF bound to a grid. */
@@ -186,46 +168,22 @@ object SpatialJoin {
   }
 
   /**
-   * Candidate pairs of two polygon/line sets intersecting by cell, with
-   * reference-point dedup (pair emitted only in the cell containing the
-   * upper-left corner of the bbox intersection). Columns of both inputs are
-   * kept; caller refines with an exact predicate.
+   * Candidate pairs of two polygon/line sets whose envelopes intersect: the
+   * reference's `a.the_geom && b.the_geom` R-tree prefilter
+   * (RsuIndicators.groovy:141-155) as a hash equi-join on ENVELOPE-cover
+   * cells. A pair is kept only in the cell of its reference point, the
+   * lower-left corner of the two envelopes' intersection. That point lies in
+   * both envelopes, so its cell is in both covers: every bbox-intersecting
+   * pair comes out exactly once, whatever the shapes. (Geometry-pruned
+   * covers need not hold that cell for non-convex shapes and lines, and
+   * would drop the pair.) Columns of both inputs are kept; callers refine
+   * with an exact predicate. `pad` expands both envelopes (e.g. by a snap
+   * tolerance) so nearly-touching pairs are kept; `keys` adds extra
+   * equi-join keys (e.g. a zone id) so pairing never crosses groups.
    */
   def candidates(a: DataFrame, aGeom: String, b: DataFrame, bGeom: String,
-                 grid: CellGrid, res: Int, broadcastB: Boolean = false): DataFrame = {
-    val envU = udf((wkb: Array[Byte]) => {
-      val e = Geo.fromWkb(wkb).getEnvelopeInternal; Array(e.getMinX, e.getMinY)
-    })
-    val aC = a.withColumn("__aenv", envU(col(aGeom)))
-      .withColumn(CellCol, explode(coverUdf(grid, res)(col(aGeom))))
-    val bC0 = b.withColumn("__benv", envU(col(bGeom)))
-      .withColumn(CellCol, explode(coverUdf(grid, res)(col(bGeom))))
-    val bC = if (broadcastB) broadcast(bC0) else bC0
-    val refCell = cellUdf(grid, res)(
-      greatest(col("__aenv")(0), col("__benv")(0)),
-      greatest(col("__aenv")(1), col("__benv")(1)))
-    aC.join(bC, CellCol)
-      .where(refCell === col(CellCol))
-      .drop(CellCol, "__aenv", "__benv")
-  }
-
-  /**
-   * Candidate pairs by ENVELOPE-cover cell equijoin with exact
-   * bbox-intersect dedup — the reference's `a.the_geom && b.the_geom`
-   * R-tree prefilter (RsuIndicators.groovy:141-155) as a hash equi-join.
-   * Unlike `candidates` (geometry-pruned covers), envelope covers guarantee
-   * the dedup reference point (lower-left corner of the bbox intersection)
-   * is a shared cover cell whenever the bboxes intersect, so every
-   * bbox-intersecting pair survives exactly once — geometry-pruned covers
-   * can drop pairs whose reference cell touches neither geometry (fine for
-   * rectangles, wrong for line/L-shaped geometries). `pad` expands both
-   * envelopes (e.g. by a snap tolerance) so nearly-touching pairs are kept;
-   * `keys` adds extra equi-join keys (e.g. a zone id) so pairing never
-   * crosses groups.
-   */
-  def candidatesBbox(a: DataFrame, aGeom: String, b: DataFrame, bGeom: String,
-                     grid: CellGrid, res: Int, pad: Double = 0.0,
-                     keys: Seq[String] = Nil, broadcastB: Boolean = false): DataFrame = {
+                 grid: CellGrid, res: Int, broadcastB: Boolean = false,
+                 pad: Double = 0.0, keys: Seq[String] = Nil): DataFrame = {
     val envU = udf((wkb: Array[Byte]) => {
       val e = Geo.fromWkb(wkb).getEnvelopeInternal
       if (e.isNull) null else { e.expandBy(pad); Array(e.getMinX, e.getMinY) }
@@ -242,10 +200,15 @@ object SpatialJoin {
     val refCell = cellUdf(grid, res)(
       greatest(col("__aenv")(0), col("__benv")(0)),
       greatest(col("__aenv")(1), col("__benv")(1)))
-    aC.join(bC, (CellCol +: keys).toSeq)
+    aC.join(bC, CellCol +: keys)
       .where(refCell === col(CellCol))
       .drop(CellCol, "__aenv", "__benv")
   }
+
+  /** `candidates` under its former name: the outside-in benchmark
+    * (perfbench/src/perfbench/Workloads.scala) compiles against it. */
+  def candidatesBbox(a: DataFrame, aGeom: String, b: DataFrame, bGeom: String,
+                     grid: CellGrid, res: Int): DataFrame = candidates(a, aGeom, b, bGeom, grid, res)
 
   /** Intersection join: candidates refined by prepared ST_INTERSECTS
     * (reference `&&` + ST_INTERSECTS — BuildingIndicators.groovy:162-163). */
@@ -272,20 +235,6 @@ object SpatialJoin {
       .where(col("__ia") > 0)
     cand.groupBy(col(srcId))
       .agg(max(struct(col("__ia"), col(tgtId))).getField(tgtId).as(tgtId))
-  }
-
-  /** Point containment assignment (reference `pointOnSurface` mode):
-    * source polygons assigned to the target containing their interior point. */
-  def assignPointOnSurface(source: DataFrame, srcId: String, srcGeom: String,
-                           target: DataFrame, tgtId: String, tgtGeom: String,
-                           grid: CellGrid, res: Int, broadcastTarget: Boolean = true): DataFrame = {
-    val pts = source.select(col(srcId),
-      G.stX(G.stPointOnSurf(col(srcGeom))).as("__px"),
-      G.stY(G.stPointOnSurf(col(srcGeom))).as("__py"))
-    pointInPolygon(pts, "__px", "__py",
-        target.select(col(tgtId), col(tgtGeom).as("__tgeom")), "__tgeom",
-        grid, res, broadcastTarget)
-      .select(col(srcId), col(tgtId))
   }
 
   /**

@@ -326,7 +326,7 @@ object OsmLayers {
     import graft.operators.SpatialJoin
     val b = df.select(col(zoneId), col(idCol).as("__idb"),
       col("the_geom").as("__gb"))
-    val cut = SpatialJoin.candidatesBbox(df.select(col(zoneId), col(idCol), col("the_geom")),
+    val cut = SpatialJoin.candidates(df.select(col(zoneId), col(idCol), col("the_geom")),
         "the_geom", b, "__gb", grid, res, keys = Seq(zoneId))
       .where(col(idCol) =!= col("__idb") && G.stOverlaps(col("the_geom"), col("__gb"))
         && G.stArea(col("the_geom")) > G.stArea(col("__gb")))
@@ -362,7 +362,7 @@ object OsmLayers {
         graft.geom.Geo.factory.createLinearRing(o.getExteriorRing.getCoordinates),
         hs.toArray).buffer(0))
     }
-    val holed = SpatialJoin.candidatesBbox(df.select(col(zoneId), col(idCol), col("the_geom")),
+    val holed = SpatialJoin.candidates(df.select(col(zoneId), col(idCol), col("the_geom")),
         "the_geom", b, "__gb", grid, res, keys = Seq(zoneId))
       .where(col(idCol) =!= col("__idb") && G.stContains(col("the_geom"), col("__gb")))
       .groupBy(col(zoneId), col(idCol), col("the_geom"))

@@ -117,7 +117,7 @@ class BdTopoSpec extends SparkTestBase {
     // overlay faces never overlap each other (the point of the noding)
     val a = imp.select(col("id_impervious").as("ia"), col("the_geom").as("ga"))
     val b = imp.select(col("id_impervious").as("ib"), col("the_geom").as("gb"))
-    val overlaps = graft.operators.SpatialJoin.candidatesBbox(a, "ga", b, "gb", grid, 8)
+    val overlaps = graft.operators.SpatialJoin.candidates(a, "ga", b, "gb", grid, 8)
       .where(col("ia") < col("ib") && G.stOverlaps(col("ga"), col("gb")))
       .withColumn("__ov", G.stIntersectionArea(col("ga"), col("gb")))
       .where(col("__ov") > 1e-6).count()
