@@ -266,8 +266,8 @@ object Queries {
       val lower = t(s, dir, "documents")
         .select(col("doc_id"), (col("doc_id") % 20).as("id_zone"), col("n_chars"))
       val upper = s.range(0, 25).toDF("id_zone")
-      unweightedOperationFromLowerScale(lower, upper, "id_zone", "doc_id",
-        Map("n_chars" -> Seq(OpSum, OpAvg)))
+      perUnit(lower, upper, "id_zone")(unweightedOperationFromLowerScale("doc_id",
+        Map("n_chars" -> Seq(OpSum, OpAvg))))
         .select(col("id_zone"), col("sum_n_chars"), col("avg_n_chars"))
         .orderBy("id_zone")
     }),

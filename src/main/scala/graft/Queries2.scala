@@ -277,7 +277,8 @@ object Queries2 {
         col("n_chars").cast("double").as("nc"),
         (col("doc_id") % 5 + 1).cast("double").as("wt"))
       val upper = s.range(0, 25).toDF("id_zone")
-      GenericIndicators.weightedAggregatedStatistics(lower, upper, "id_zone", Seq(("nc", "wt")))
+      GenericIndicators.perUnit(lower, upper, "id_zone")(
+        GenericIndicators.weightedAggregatedStatistics(Seq(("nc", "wt"))))
         .select(col("id_zone"),
           round(col("avg_nc_wt_weighted"), 6).as("avg_nc_wt_weighted"),
           round(col("std_nc_wt_weighted"), 6).as("std_nc_wt_weighted"))
@@ -288,10 +289,10 @@ object Queries2 {
     "agg_type_prop" -> ((s, dir) => {
       val lower = rectLayer(s, dir).withColumn("id_zone", col("id_build") % 20)
       val upper = s.range(0, 25).toDF("id_zone")
-      GenericIndicators.typeProportion(lower, upper, "id_zone", "type",
+      GenericIndicators.perUnit(lower, upper, "id_zone")(GenericIndicators.typeProportion("type",
         areaTypes = Map("residential" -> Seq("residential"),
           "industrial" -> Seq("industrial", "commercial")),
-        floorAreaTypes = Map("residential" -> Seq("residential")))
+        floorAreaTypes = Map("residential" -> Seq("residential"))))
         .select(col("id_zone"),
           round(col("area_fraction_residential"), 9).as("area_fraction_residential"),
           round(col("area_fraction_industrial"), 9).as("area_fraction_industrial"),
@@ -323,7 +324,8 @@ object Queries2 {
       val b = rects.join(nb, "id_build")
         .withColumn("volume", col("w") * col("h") * 0.5 * (col("height_wall") + col("height_roof")))
         .withColumn("id_block", floor(col("id_build") / 10).cast("long"))
-      BlockIndicators.netCompactness(b)
+      GenericIndicators.perUnit(b, b.select("id_block").distinct(), "id_block")(
+        BlockIndicators.netCompactness)
         .select(col("id_block"), round(col("net_compactness"), 9).as("net_compactness"))
         .orderBy("id_block")
     }),
@@ -342,12 +344,9 @@ object Queries2 {
       val zones = rects.select("id_rsu").distinct()
         .withColumn("the_geom", G.stMakeBox(lit(0.0), lit(0.0),
           lit(10.0) + col("id_rsu") % 7, lit(10.0) + col("id_rsu") % 3))
-      val ffd = RsuIndicators.freeExternalFacadeDensity(b, zones)
-      val dens = unweightedOperationFromLowerScale(
-        b.select(col("id_rsu"), col("barea"), col("height_roof"), col("id_build")),
-        zones, "id_rsu", "id_build",
-        Map("barea" -> Seq(OpDens), "height_roof" -> Seq(OpAvg)))
-      val zi = ffd.join(dens, "id_rsu")
+      val zi = perUnit(b, zones, "id_rsu")(RsuIndicators.freeExternalFacadeDensity,
+        unweightedOperationFromLowerScale("id_build",
+          Map("barea" -> Seq(OpDens), "height_roof" -> Seq(OpAvg))))
       val ar = RsuIndicators.aspectRatio(zi, "free_external_facade_density", "barea_density")
       val withAr = zi.join(ar, "id_rsu")
       val sw = RsuIndicators.streetWidth(withAr, "avg_height_roof", "aspect_ratio")
@@ -576,9 +575,9 @@ object Queries2 {
         .where(col("y0") < 80)
         .select(floor(col("y0") / 20).cast("long").as("id_rsu"),
           col("height_wall"), col("id_build"))
-      val gm = unweightedOperationFromLowerScale(lower, facBands(s), "id_rsu", "id_build",
-        Map("height_wall" -> Seq(OpGeomAvg)))
-      val joined = facDist(s, dir).join(gm, "id_rsu").join(facBands(s), "id_rsu")
+      val gm = perUnit(lower, facBands(s), "id_rsu")(unweightedOperationFromLowerScale("id_build",
+        Map("height_wall" -> Seq(OpGeomAvg))))
+      val joined = facDist(s, dir).join(gm, "id_rsu")
       RsuIndicators.effectiveTerrainRoughnessLength(joined, FacOutNames, "geom_avg_height_wall")
         .select(col("id_rsu"),
           round(col("effective_terrain_roughness_length"), 6).as("effective_terrain_roughness_length"))
@@ -735,7 +734,7 @@ object Queries2 {
     "bld_direction" -> ((s, dir) => {
       val b = rectLayer(s, dir).withColumn("id_zone", col("id_build") % 20)
       val upper = s.range(0, 25).toDF("id_zone")
-      GenericIndicators.buildingDirectionDistribution(b, upper, "id_zone", 15)
+      GenericIndicators.perUnit(b, upper, "id_zone")(GenericIndicators.buildingDirectionDistribution(15))
         .select(col("id_zone"), col("main_building_direction"),
           round(col("building_direction_equality"), 9).as("building_direction_equality"),
           round(col("building_direction_uniqueness"), 9).as("building_direction_uniqueness"))

@@ -5,7 +5,6 @@ import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory
 import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
 import org.locationtech.jts.operation.buffer.BufferParameters
 import org.locationtech.jts.algorithm.MinimumDiameter
-import org.locationtech.jts.precision.GeometryPrecisionReducer
 
 /**
  * Core geometry kernel: WKB <-> JTS codec plus the scalar geometry operations
@@ -270,11 +269,5 @@ object Geo {
     }
     walk(g)
     factory.createMultiLineString(lines.result())
-  }
-
-  /** ST_PRECISIONREDUCER scale=10^digits (RsuIndicators.groovy:1604 uses 3). */
-  def precisionReduce(g: Geometry, digits: Int): Geometry = {
-    val pm = new PrecisionModel(math.pow(10, digits))
-    GeometryPrecisionReducer.reduce(g, pm)
   }
 }

@@ -35,7 +35,6 @@ object GeoFunctions {
   val stCentroid     = udf((b: Array[Byte]) => Geo.toWkb(Geo.fromWkb(b).getCentroid))
   val stPointOnSurf  = udf((b: Array[Byte]) => Geo.toWkb(Geo.fromWkb(b).getInteriorPoint))
   val stEnvelope     = udf((b: Array[Byte]) => Geo.toWkb(Geo.fromWkb(b).getEnvelope))
-  val stMinimumRect  = udf((b: Array[Byte]) => Geo.toWkb(Geo.minimumRectangle(Geo.fromWkb(b))))
   val stMakeValid    = udf((b: Array[Byte]) => Geo.toWkb(org.locationtech.jts.geom.util.GeometryFixer.fix(Geo.fromWkb(b))))
   val stBuffer       = udf((b: Array[Byte], d: Double) => Geo.toWkb(Geo.fromWkb(b).buffer(d)))
   val stBufferMitre  = udf((b: Array[Byte], d: Double) => Geo.toWkb(Geo.bufferMitre(Geo.fromWkb(b), d)))
@@ -44,7 +43,6 @@ object GeoFunctions {
   /** ST_BUFFER with explicit quadrant segments (H2GIS 3-arg form). */
   val stBufferQuad   = udf((b: Array[Byte], d: Double, quadSegs: Int) =>
     Geo.toWkb(Geo.fromWkb(b).buffer(d, quadSegs)))
-  val stPrecisionReduce = udf((b: Array[Byte], digits: Int) => Geo.toWkb(Geo.precisionReduce(Geo.fromWkb(b), digits)))
   val stRemoveHoles  = udf((b: Array[Byte]) => Geo.toWkb(Geo.removeHoles(Geo.fromWkb(b))))
   /** ST_EXTERIORRING of (the first polygon of) a polygonal geometry. */
   val stExteriorRing = udf { (b: Array[Byte]) =>

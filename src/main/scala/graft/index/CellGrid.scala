@@ -178,13 +178,6 @@ final case class CellGrid(minX: Double, minY: Double, worldSize: Double) {
     * candidate set (BuildingIndicators.groovy:304-432 `ST_EXPAND` analogue). */
   def cellsInRadius(x: Double, y: Double, r: Double, res: Int): Array[Long] =
     coverEnvelope(new Envelope(x - r, x + r, y - r, y + r), res)
-
-  /** Pick a resolution where cells are ~targetCellSize wide. */
-  def resForCellSize(targetCellSize: Double): Int = {
-    var res = 0
-    while (res < maxRes && cellSize(res) > targetCellSize) res += 1
-    res
-  }
 }
 
 object CellGrid {

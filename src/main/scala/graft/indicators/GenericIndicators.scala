@@ -6,12 +6,42 @@ import graft.geom.{GeoFunctions => G}
 
 /**
  * Scale-transfer aggregations — Spark re-expression of the reference's
- * GenericIndicators.groovy. All are single hash aggregates (partial+final
- * map-side combine for free) followed by a left join back to the upper
- * table so empty upper units keep 0 defaults (the reference's RIGHT JOIN +
- * COALESCE idiom).
+ * GenericIndicators.groovy. The reference runs each family as its own
+ * RIGHT JOIN … GROUP BY into a temp table; here each family is an aggregate
+ * spec ([[Family]]), and [[perUnit]] runs every family a scale needs over
+ * one lower table as ONE hash aggregate (partial+final map-side combine for
+ * free) and ONE left join back to the upper table, so empty upper units keep
+ * the reference's COALESCE defaults.
  */
 object GenericIndicators {
+
+  /** One family's share of a [[perUnit]] pass: per-row input columns derived
+    * from the lower rows, aggregate columns over them, and output columns
+    * over the upper row left-joined with the aggregates (outputs may read the
+    * upper unit's columns, e.g. its `the_geom`). */
+  final case class Parts(inputs: Seq[Column], aggs: Seq[Column], outputs: Seq[Column])
+
+  /** A scale-transfer family: its [[Parts]] given the prefix its internal
+    * column names carry, so several families (two instances of one family
+    * included) share one aggregate without name clashes. */
+  type Family = String => Parts
+
+  /**
+   * Scale transfer of `families` from `lower` to `upper` (one row per `id`):
+   * one projection of the families' inputs over `lower`, one
+   * `groupBy(id).agg`, one left join to `upper` and one select of `upper`'s
+   * columns plus every family's outputs. Pass only the upper columns the
+   * result should keep and the outputs read.
+   */
+  def perUnit(lower: DataFrame, upper: DataFrame, id: String)(families: Family*): DataFrame = {
+    val parts = families.zipWithIndex.map { case (f, i) => f(s"__f${i}_") }
+    val aggs = parts.flatMap(_.aggs)
+    val joined =
+      if (aggs.isEmpty) upper
+      else upper.join(lower.select(col(id) +: parts.flatMap(_.inputs): _*)
+        .groupBy(col(id)).agg(aggs.head, aggs.tail: _*), Seq(id), "left")
+    joined.select(upper.columns.map(col) ++ parts.flatMap(_.outputs): _*)
+  }
 
   sealed trait UnweightedOp
   case object OpSum extends UnweightedOp
@@ -23,37 +53,38 @@ object GenericIndicators {
 
   /**
    * Per-upper-unit SUM / AVG / STD / GEOM_AVG (= EXP(AVG(LOG x))) / DENS
-   * (SUM/upper-area) / NB_DENS (COUNT/upper-area) over a lower-scale column,
-   * keeping empty upper units with 0 — GenericIndicators.groovy:57-125.
+   * (SUM/upper-area) / NB_DENS (COUNT of `idLow`/upper-area) over
+   * lower-scale columns, keeping empty upper units with 0 —
+   * GenericIndicators.groovy:57-125. DENS and NB_DENS read the upper
+   * `the_geom`.
    *
    * @param vars map of lower-scale column -> operations
    */
-  def unweightedOperationFromLowerScale(lower: DataFrame, upper: DataFrame,
-                                        idUp: String, idLow: String,
-                                        vars: Map[String, Seq[UnweightedOp]]): DataFrame = {
-    val aggs: Seq[Column] = vars.toSeq.flatMap { case (v, ops) =>
-      ops.map {
-        case OpSum     => sum(col(v).cast("double")).as(s"sum_$v")
-        case OpAvg     => avg(col(v).cast("double")).as(s"avg_$v")
-        case OpStd     => stddev_pop(col(v).cast("double")).as(s"std_$v")
-        case OpGeomAvg => exp(avg(log(col(v).cast("double")))).as(s"geom_avg_$v")
-        case OpDens    => sum(col(v).cast("double")).as(s"__dsum_$v")
-        case OpNbDens  => count(col(idLow)).as(s"__ncnt_$v")
-      }
-    }
-    val grouped = lower.groupBy(col(idUp)).agg(aggs.head, aggs.tail: _*)
-    val joined = upper.join(grouped, Seq(idUp), "left")
-    val out = vars.toSeq.flatMap { case (v, ops) =>
-      ops.map {
-        case OpSum     => coalesce(col(s"sum_$v"), lit(0.0)).as(s"sum_$v")
-        case OpAvg     => coalesce(col(s"avg_$v"), lit(0.0)).as(s"avg_$v")
-        case OpStd     => coalesce(col(s"std_$v"), lit(0.0)).as(s"std_$v")
-        case OpGeomAvg => coalesce(col(s"geom_avg_$v"), lit(0.0)).as(s"geom_avg_$v")
-        case OpDens    => coalesce(col(s"__dsum_$v") / G.stArea(col("the_geom")), lit(0.0)).as(s"${v}_density")
-        case OpNbDens  => coalesce(col(s"__ncnt_$v") / G.stArea(col("the_geom")), lit(0.0)).as(s"${v}_number_density")
-      }
-    }
-    joined.select(col(idUp) +: out: _*)
+  def unweightedOperationFromLowerScale(idLow: String,
+                                        vars: Map[String, Seq[UnweightedOp]]): Family = p => {
+    val ops = vars.toSeq
+    def in(v: String) = col(s"${p}v_$v")
+    def agg(name: String) = col(s"$p$name")
+    val area = G.stArea(col("the_geom"))
+    Parts(
+      ops.collect { case (v, os) if os.exists(_ != OpNbDens) => col(v).cast("double").as(s"${p}v_$v") } ++
+        (if (ops.exists(_._2.contains(OpNbDens))) Seq(col(idLow).as(s"${p}id")) else Nil),
+      ops.flatMap { case (v, os) => os.map {
+        case OpSum     => sum(in(v)).as(s"${p}sum_$v")
+        case OpAvg     => avg(in(v)).as(s"${p}avg_$v")
+        case OpStd     => stddev_pop(in(v)).as(s"${p}std_$v")
+        case OpGeomAvg => exp(avg(log(in(v)))).as(s"${p}geom_avg_$v")
+        case OpDens    => sum(in(v)).as(s"${p}dsum_$v")
+        case OpNbDens  => count(col(s"${p}id")).as(s"${p}ncnt_$v")
+      }},
+      ops.flatMap { case (v, os) => os.map {
+        case OpSum     => coalesce(agg(s"sum_$v"), lit(0.0)).as(s"sum_$v")
+        case OpAvg     => coalesce(agg(s"avg_$v"), lit(0.0)).as(s"avg_$v")
+        case OpStd     => coalesce(agg(s"std_$v"), lit(0.0)).as(s"std_$v")
+        case OpGeomAvg => coalesce(agg(s"geom_avg_$v"), lit(0.0)).as(s"geom_avg_$v")
+        case OpDens    => coalesce(agg(s"dsum_$v") / area, lit(0.0)).as(s"${v}_density")
+        case OpNbDens  => coalesce(agg(s"ncnt_$v") / area, lit(0.0)).as(s"${v}_number_density")
+      }})
   }
 
   /**
@@ -63,75 +94,65 @@ object GenericIndicators {
    * the algebraic identity std² = Σw·v²/Σw − μ² (same result, half the
    * shuffles — SURVEY §2.4).
    *
-   * @param varsWeights (variable, weight) pairs
+   * @param varsWeights (variable, weight) pairs of lower-scale columns
    */
-  def weightedAggregatedStatistics(lower: DataFrame, upper: DataFrame, idUp: String,
-                                   varsWeights: Seq[(String, String)]): DataFrame = {
-    val aggs = varsWeights.flatMap { case (v, w) =>
-      Seq(sum(col(v) * col(w)).as(s"__sw_${v}_$w"),
-        sum(col(v) * col(v) * col(w)).as(s"__sww_${v}_$w"),
-        sum(col(w)).as(s"__w_${v}_$w"))
-    }
-    val grouped = lower.groupBy(col(idUp)).agg(aggs.head, aggs.tail: _*)
-    val joined = upper.select(idUp).join(grouped, Seq(idUp), "left")
-    val out = varsWeights.flatMap { case (v, w) =>
-      val sw = col(s"__sw_${v}_$w"); val sww = col(s"__sww_${v}_$w"); val sumw = col(s"__w_${v}_$w")
-      val mean = sw / sumw
-      Seq(
-        when(sumw.isNull || sumw === 0, 0.0).otherwise(coalesce(mean, lit(0.0)))
-          .as(s"avg_${v}_${w}_weighted"),
-        when(sumw.isNull || sumw === 0, 0.0)
-          .otherwise(coalesce(sqrt(greatest(sww / sumw - mean * mean, lit(0.0))), lit(0.0)))
-          .as(s"std_${v}_${w}_weighted"))
-    }
-    joined.select(col(idUp) +: out: _*)
+  def weightedAggregatedStatistics(varsWeights: Seq[(String, String)]): Family = p => {
+    def c(kind: String, v: String, w: String) = col(s"$p${kind}_${v}_$w")
+    Parts(
+      varsWeights.flatMap { case (v, w) =>
+        Seq(col(v).as(s"${p}v_${v}_$w"), col(w).as(s"${p}w_${v}_$w")) },
+      varsWeights.flatMap { case (v, w) =>
+        val x = c("v", v, w); val wt = c("w", v, w)
+        Seq(sum(x * wt).as(s"${p}sw_${v}_$w"), sum(x * x * wt).as(s"${p}sww_${v}_$w"),
+          sum(wt).as(s"${p}sumw_${v}_$w")) },
+      varsWeights.flatMap { case (v, w) =>
+        val sw = c("sw", v, w); val sww = c("sww", v, w); val sumw = c("sumw", v, w)
+        val mean = sw / sumw
+        Seq(
+          when(sumw.isNull || sumw === 0, 0.0).otherwise(coalesce(mean, lit(0.0)))
+            .as(s"avg_${v}_${w}_weighted"),
+          when(sumw.isNull || sumw === 0, 0.0)
+            .otherwise(coalesce(sqrt(greatest(sww / sumw - mean * mean, lit(0.0))), lit(0.0)))
+            .as(s"std_${v}_${w}_weighted"))
+      })
   }
 
   /**
-   * Area fraction per type group (+optional floor-area fraction), remainder
-   * folded into *_undefined — GenericIndicators.groovy:697-800. Pure
-   * CASE-WHEN aggregate: one pass.
+   * Area fraction per type group (+optional floor-area fraction, which reads
+   * the lower `nb_lev`), remainder folded into *_undefined —
+   * GenericIndicators.groovy:697-800. Pure CASE-WHEN aggregates.
    *
    * @param areaTypes map fractionName -> accepted `type` values
    */
-  def typeProportion(lower: DataFrame, upper: DataFrame, idField: String, typeField: String,
-                     areaTypes: Map[String, Seq[String]],
-                     floorAreaTypes: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    val area = G.stArea(col("the_geom"))
-    val floorArea = area * col("nb_lev")
-    val aggs =
-      Seq(sum(area).as("__area")) ++
-      areaTypes.map { case (name, compo) =>
-        sum(when(col(typeField).isin(compo: _*), area)).as(s"__a_$name") }.toSeq ++
-      (if (floorAreaTypes.nonEmpty) Seq(sum(floorArea).as("__farea")) else Nil) ++
-      floorAreaTypes.map { case (name, compo) =>
-        sum(when(col(typeField).isin(compo: _*), floorArea)).as(s"__f_$name") }.toSeq
-    val grouped = lower.groupBy(col(idField)).agg(aggs.head, aggs.tail: _*)
-    val joined = upper.select(idField).join(grouped, Seq(idField), "left")
-
-    def fractions(names: Iterable[String], tot: Column, pfx: String, outPfx: String): Seq[Column] =
-      names.toSeq.map { name =>
-        when(tot.isNull || tot === 0, 0.0)
-          .otherwise(coalesce(col(s"$pfx$name") / tot, lit(0.0)))
-          .as(s"$outPfx$name")
+  def typeProportion(typeField: String, areaTypes: Map[String, Seq[String]],
+                     floorAreaTypes: Map[String, Seq[String]] = Map.empty): Family = p => {
+    val area = col(s"${p}area"); val tpe = col(s"${p}type")
+    val floorArea = area * col(s"${p}nb_lev")
+    def fractions(types: Map[String, Seq[String]], tot: Column, pfx: String, outPfx: String) = {
+      val names = types.keys.toSeq
+      val base = names.map { name =>
+        name -> when(tot.isNull || tot === 0, 0.0).otherwise(coalesce(col(s"$p$pfx$name") / tot, lit(0.0)))
       }
-    val areaCols = fractions(areaTypes.keys, col("__area"), "__a_", "area_fraction_")
-    val floorCols = fractions(floorAreaTypes.keys, col("__farea"), "__f_", "floor_area_fraction_")
-    // fold the unexplained remainder into *_undefined when requested
-    // (GenericIndicators.groovy:766-778)
-    val withFracs = joined.select(col(idField) +: (areaCols ++ floorCols): _*)
-    def foldUndefined(df: DataFrame, keys: Iterable[String], pfx: String): DataFrame = {
-      val undefCols = keys.filter(k => k == "undefined" || k == "undefined_lcz").map(k => s"$pfx$k")
-      if (undefCols.isEmpty) df
-      else {
-        val total = keys.map(k => col(s"$pfx$k")).reduce(_ + _)
-        undefCols.foldLeft(df) { (d, uc) =>
-          d.withColumn(uc, when(total < 1.0, lit(1.0) - total + col(uc)).otherwise(col(uc)))
+      // fold the unexplained remainder into *_undefined when requested
+      // (GenericIndicators.groovy:766-778)
+      val folded = names.filter(k => k == "undefined" || k == "undefined_lcz")
+        .foldLeft(base.toMap) { (m, uc) =>
+          val total = names.map(m).reduce(_ + _)
+          m.updated(uc, when(total < 1.0, lit(1.0) - total + m(uc)).otherwise(m(uc)))
         }
-      }
+      names.map(k => folded(k).as(s"$outPfx$k"))
     }
-    foldUndefined(foldUndefined(withFracs, areaTypes.keys, "area_fraction_"),
-      floorAreaTypes.keys, "floor_area_fraction_")
+    Parts(
+      Seq(G.stArea(col("the_geom")).as(s"${p}area"), col(typeField).as(s"${p}type")) ++
+        (if (floorAreaTypes.nonEmpty) Seq(col("nb_lev").as(s"${p}nb_lev")) else Nil),
+      Seq(sum(area).as(s"${p}tot")) ++
+        areaTypes.map { case (name, compo) =>
+          sum(when(tpe.isin(compo: _*), area)).as(s"${p}a_$name") }.toSeq ++
+        (if (floorAreaTypes.nonEmpty) Seq(sum(floorArea).as(s"${p}ftot")) else Nil) ++
+        floorAreaTypes.map { case (name, compo) =>
+          sum(when(tpe.isin(compo: _*), floorArea)).as(s"${p}f_$name") }.toSeq,
+      fractions(areaTypes, col(s"${p}tot"), "a_", "area_fraction_") ++
+        fractions(floorAreaTypes, col(s"${p}ftot"), "f_", "floor_area_fraction_"))
   }
 
   /**
@@ -144,10 +165,10 @@ object GenericIndicators {
    * `angleRangeSize`° classes (nested CASE: ANG_L wins the bucket); per
    * upper unit the distribution is characterized (Perkins equality,
    * two-largest uniqueness, extremum bucket name); empty units → -1 /
-   * "unknown" (reference defaults).
+   * "unknown" (reference defaults). The per-building kernel is one UDF
+   * projected once; the bucket sums read its struct fields.
    */
-  def buildingDirectionDistribution(building: DataFrame, upper: DataFrame, idUp: String,
-                                    angleRangeSize: Int = 15): DataFrame = {
+  def buildingDirectionDistribution(angleRangeSize: Int = 15): Family = {
     require(180 % angleRangeSize == 0 && 180 / angleRangeSize > 1)
     val nb = 180 / angleRangeSize
     val props = udf { (wkb: Array[Byte]) =>
@@ -169,37 +190,39 @@ object GenericIndicators {
       val angH = if (angH360 > 180) angH360 - 180 else angH360
       (lenL, lenH, angL, angH)
     }
-    val p = building.select(col(idUp), props(col("the_geom")).as("__p"))
-      .select(col(idUp), col("__p._1").as("__len_l"), col("__p._2").as("__len_h"),
-        col("__p._3").as("__ang_l"), col("__p._4").as("__ang_h"))
     def name(b: Int): String = {
       val center = b * angleRangeSize + angleRangeSize / 2.0
       "ang" + f"$center%.1f".replace('.', '_') // Groovy float toString keeps one decimal
     }
-    val buckets = (0 until nb).map { b =>
-      val lo = b * angleRangeSize; val hi = lo + angleRangeSize
-      sum(when(col("__ang_l") >= lo && col("__ang_l") < hi, col("__len_l"))
-        .otherwise(when(col("__ang_h") >= lo && col("__ang_h") < hi, col("__len_h"))
-          .otherwise(0.0))).as(name(b))
-    }
     val names = (0 until nb).map(name)
-    val dist = p.groupBy(col(idUp)).agg(buckets.head, buckets.tail: _*)
-    val joined = upper.select(idUp).join(dist, Seq(idUp), "left")
-    val arr = array(names.map(col): _*)
-    val tot = aggregate(arr, lit(0.0), (a, x) => a + x)
-    val sorted = array_sort(arr)
-    val x1 = element_at(sorted, -1); val x2 = element_at(sorted, -2)
-    val mx = greatest(names.map(col): _*)
-    val mainDir = coalesce(names.map(n => when(col(n) === mx, lit(n))) :+ lit("unknown"): _*)
-    joined.select(col(idUp),
-      when(col(names.head).isNull, lit("unknown")).otherwise(mainDir)
-        .as("main_building_direction"),
-      when(col(names.head).isNull, -1.0)
-        .otherwise(aggregate(arr, lit(0.0), (a, x) => a + least(x, tot / nb)) / tot)
-        .as("building_direction_equality"),
-      when(col(names.head).isNull, -1.0)
-        .otherwise(abs(x1 - x2) / (x1 + x2))
-        .as("building_direction_uniqueness"))
+    p => {
+      val k = col(s"${p}k")
+      val (lenL, lenH, angL, angH) =
+        (k.getField("_1"), k.getField("_2"), k.getField("_3"), k.getField("_4"))
+      val buckets = names.map(n => col(s"$p$n"))
+      val arr = array(buckets: _*)
+      val tot = aggregate(arr, lit(0.0), (a, x) => a + x)
+      val sorted = array_sort(arr)
+      val x1 = element_at(sorted, -1); val x2 = element_at(sorted, -2)
+      val mx = greatest(buckets: _*)
+      val mainDir = coalesce(names.zip(buckets).map { case (n, c) => when(c === mx, lit(n)) } :+
+        lit("unknown"): _*)
+      val empty = buckets.head.isNull
+      Parts(
+        Seq(props(col("the_geom")).as(s"${p}k")),
+        (0 until nb).map { b =>
+          val lo = b * angleRangeSize; val hi = lo + angleRangeSize
+          sum(when(angL >= lo && angL < hi, lenL)
+            .otherwise(when(angH >= lo && angH < hi, lenH).otherwise(0.0))).as(s"$p${name(b)}")
+        },
+        Seq(
+          when(empty, lit("unknown")).otherwise(mainDir).as("main_building_direction"),
+          when(empty, -1.0)
+            .otherwise(aggregate(arr, lit(0.0), (a, x) => a + least(x, tot / nb)) / tot)
+            .as("building_direction_equality"),
+          when(empty, -1.0).otherwise(abs(x1 - x2) / (x1 + x2))
+            .as("building_direction_uniqueness")))
+    }
   }
 
   /**

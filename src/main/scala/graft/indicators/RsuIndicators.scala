@@ -15,14 +15,14 @@ object RsuIndicators {
 
   /** SUM((1-contiguity)·facade_len·h_wall)/rsu_area, 0 for empty RSUs —
     * RsuIndicators.groovy:53-86 (golden rsu1 = 0.947 on buildings 1-7).
-    * Input buildings need id_rsu, contiguity, total_facade_length, height_wall. */
-  def freeExternalFacadeDensity(building: DataFrame, rsu: DataFrame): DataFrame = {
-    val agg = building.groupBy("id_rsu").agg(
-      sum((lit(1.0) - col("contiguity")) * col("total_facade_length") * col("height_wall")).as("__s"))
-    rsu.select(col("id_rsu"), col("the_geom")).join(agg, Seq("id_rsu"), "left")
-      .select(col("id_rsu"),
-        coalesce(col("__s") / G.stArea(col("the_geom")), lit(0.0)).as("free_external_facade_density"))
-  }
+    * A [[GenericIndicators.perUnit]] family: reads the buildings'
+    * contiguity, total_facade_length and height_wall, and the RSU's the_geom. */
+  val freeExternalFacadeDensity: GenericIndicators.Family = p => GenericIndicators.Parts(
+    Seq(((lit(1.0) - col("contiguity")) * col("total_facade_length") * col("height_wall"))
+      .as(s"${p}f")),
+    Seq(sum(col(s"${p}f")).as(s"${p}s")),
+    Seq(coalesce(col(s"${p}s") / G.stArea(col("the_geom")), lit(0.0))
+      .as("free_external_facade_density")))
 
   /**
    * Exact free external facade density — RsuIndicators.groovy:108-214

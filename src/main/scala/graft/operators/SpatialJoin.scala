@@ -184,12 +184,15 @@ object SpatialJoin {
   def candidates(a: DataFrame, aGeom: String, b: DataFrame, bGeom: String,
                  grid: CellGrid, res: Int, broadcastB: Boolean = false,
                  pad: Double = 0.0, keys: Seq[String] = Nil): DataFrame = {
+    // a null geometry, like an empty one, has a null envelope: no cells, no pairs
+    def env(wkb: Array[Byte]) =
+      if (wkb == null) new org.locationtech.jts.geom.Envelope() else Geo.fromWkb(wkb).getEnvelopeInternal
     val envU = udf((wkb: Array[Byte]) => {
-      val e = Geo.fromWkb(wkb).getEnvelopeInternal
+      val e = env(wkb)
       if (e.isNull) null else { e.expandBy(pad); Array(e.getMinX, e.getMinY) }
     })
     val envCoverU = udf((wkb: Array[Byte]) => {
-      val e = Geo.fromWkb(wkb).getEnvelopeInternal
+      val e = env(wkb)
       if (e.isNull) Array.empty[Long] else { e.expandBy(pad); grid.coverEnvelope(e, res) }
     })
     val aC = a.withColumn("__aenv", envU(col(aGeom)))

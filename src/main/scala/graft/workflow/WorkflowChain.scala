@@ -79,31 +79,22 @@ object WorkflowChain {
    * Block-scale indicators. `buildingIndics` must carry id_block plus the
    * building-scale columns (area, floor_area, volume, contiguity,
    * height_roof, height_wall, the_geom); `blocks` is (id_block, the_geom).
+   * Every family aggregates the buildings in ONE pass by id_block.
    */
   def computeBlockIndicators(buildingIndics: DataFrame, blocks: DataFrame): DataFrame = {
-    val sums = GenericIndicators.unweightedOperationFromLowerScale(
-      buildingIndics.select("id_block", "area", "floor_area", "volume", "id_build"),
-      blocks.select("id_block"), "id_block", "id_build",
-      Map("area" -> Seq(GenericIndicators.OpSum),
-        "floor_area" -> Seq(GenericIndicators.OpSum),
-        "volume" -> Seq(GenericIndicators.OpSum)))
+    import GenericIndicators._
+    perUnit(buildingIndics, blocks, "id_block")(
+      unweightedOperationFromLowerScale("id_build", Map("area" -> Seq(OpSum),
+        "floor_area" -> Seq(OpSum), "volume" -> Seq(OpSum))),
+      BlockIndicators.holeAreaDensity,
+      buildingDirectionDistribution(angleRangeSize = 15),
+      BlockIndicators.closingness,
+      BlockIndicators.netCompactness,
+      weightedAggregatedStatistics(Seq(("height_roof", "area"))))
       // reference renames SUM_x back to the bare names (:225-236)
       .withColumnRenamed("sum_area", "area")
       .withColumnRenamed("sum_floor_area", "floor_area")
       .withColumnRenamed("sum_volume", "volume")
-    blocks
-      .join(sums, Seq("id_block"), "left")
-      .join(BlockIndicators.holeAreaDensity(blocks), Seq("id_block"), "left")
-      .join(GenericIndicators.buildingDirectionDistribution(
-        buildingIndics.select("id_build", "id_block", "the_geom"),
-        blocks.select("id_block"), "id_block", angleRangeSize = 15),
-        Seq("id_block"), "left")
-      .join(BlockIndicators.closingness(buildingIndics, blocks), Seq("id_block"), "left")
-      .join(BlockIndicators.netCompactness(buildingIndics), Seq("id_block"), "left")
-      .join(GenericIndicators.weightedAggregatedStatistics(
-        buildingIndics.select("id_block", "height_roof", "area"),
-        blocks.select("id_block"), "id_block", Seq(("height_roof", "area"))),
-        Seq("id_block"), "left")
   }
 
   // ---- RSU scale (computeRSUIndicators, :302-744) -------------------------
@@ -152,9 +143,10 @@ object WorkflowChain {
     Seq("high_vegetation_building_fraction", "building_fraction")
 
   /**
-   * RSU-scale indicator table. `bu` = the building-indicator table WITH
-   * id_rsu attached; `rsu` = (id_rsu, the_geom). All blocks gated by
-   * `indicatorUse` exactly like the reference.
+   * RSU-scale indicator table. `bu` = the building-indicator table (with
+   * its `area`) WITH id_rsu attached; `rsu` = (id_rsu, the_geom). All
+   * blocks gated by `indicatorUse` exactly like the reference. Every
+   * building → RSU family aggregates `bu` in ONE checkpointed pass by id_rsu.
    */
   def computeRsuIndicators(bu: DataFrame, rsu0: DataFrame,
                            road: Option[DataFrame], vegetation: Option[DataFrame],
@@ -170,7 +162,41 @@ object WorkflowChain {
     val utrf = uses.contains("UTRF"); val lcz = uses.contains("LCZ")
     val teb = uses.contains("TEB")
     val rsu = rsu0.select("id_rsu", "the_geom").localCheckpoint()
-    var out = rsu
+
+    // -- building families, one aggregate over bu ---------------------------
+    // type fractions (LCZ, TEB), free external facade density (LCZ || UTRF),
+    // unweighted stats, weighted height stats (LCZ || UTRF) and building
+    // direction (UTRF)
+    import GenericIndicators._
+    var ops = Map("floor_area" -> Seq[UnweightedOp](OpDens))
+    if (lcz) ops = merge(ops, Map("height_roof" -> Seq(OpGeomAvg)))
+    if (utrf) {
+      ops = merge(ops, Map("volume" -> Seq(OpDens, OpAvg),
+        "height_roof" -> Seq(OpGeomAvg),
+        "number_building_neighbor" -> Seq(OpAvg),
+        "minimum_building_spacing" -> Seq(OpAvg),
+        "building" -> Seq(OpNbDens)))
+      if (bu.columns.contains("pop")) ops = merge(ops, Map("pop" -> Seq(OpSum, OpDens)))
+    }
+    if (teb) ops = merge(ops, Map("height_roof" -> Seq(OpGeomAvg, OpAvg, OpStd)))
+    val hasType = bu.columns.contains("type")
+    val families = Seq(
+      (lcz && hasType) -> typeProportion("type", LczTypeComposition),
+      (teb && hasType) -> typeProportion("type", WorkflowRunner.TebTypeComposition,
+        WorkflowRunner.TebTypeComposition),
+      (lcz || utrf) -> RsuIndicators.freeExternalFacadeDensity,
+      true -> unweightedOperationFromLowerScale("id_build",
+        ops.filter { case (k, _) => k == "building" || bu.columns.contains(k) }),
+      (lcz || utrf) -> weightedAggregatedStatistics(Seq(("height_roof", "area"), ("nb_lev", "area"))),
+      utrf -> buildingDirectionDistribution(angleRangeSizeBuDirection))
+      .collect { case (true, f) => f }
+    val perRsu = perUnit(if (bu.columns.contains("nb_lev")) bu else bu.withColumn("nb_lev", lit(1)),
+        rsu, "id_rsu")(families: _*)
+      .withColumnRenamed("floor_area_density", "building_floor_area_density")
+      .withColumnRenamed("volume_density", "building_volume_density")
+      .drop("std_nb_lev_area_weighted")
+      .localCheckpoint()
+    var out = perRsu
 
     // -- surface fractions (smallestCommonGeometry + overlay) --------------
     def veg(cls: String) = vegetation.map(v =>
@@ -187,28 +213,20 @@ object WorkflowChain {
     val scg = RsuIndicators.smallestCommonGeometry(rsu, fractionLayers, grid, res)
     val fractions = RsuIndicators.surfaceFractions(scg, rsu, superpos, priorities)
       .localCheckpoint()
-    out = out.join(fractions.drop("the_geom"), Seq("id_rsu"), "left")
     val fracCols = fractions.columns.toSet
     def comboSum(m: Map[String, Seq[String]]): Seq[Column] =
       m.toSeq.sortBy(_._1).map { case (name, parts) =>
         val present = parts.filter(fracCols)
         (if (present.isEmpty) lit(0.0) else present.map(col).reduce(_ + _)).as(name)
       }
-    if (utrf) out = out.join(
-      fractions.select(col("id_rsu") +: comboSum(UtrfSurfFraction): _*), Seq("id_rsu"), "left")
-    if (lcz) out = out.join(
-      fractions.select(col("id_rsu") +: comboSum(LczSurfFraction): _*), Seq("id_rsu"), "left")
-
-    // -- building type fractions -------------------------------------------
-    val buForTypes = bu.select(col("id_rsu"), col("type"), col("the_geom"),
-      (if (bu.columns.contains("nb_lev")) col("nb_lev") else lit(1)).as("nb_lev"))
-    if (lcz && bu.columns.contains("type"))
-      out = out.join(GenericIndicators.typeProportion(buForTypes, rsu.select("id_rsu"),
-        "id_rsu", "type", LczTypeComposition, Map.empty), Seq("id_rsu"), "left")
-    if (teb && bu.columns.contains("type"))
-      out = out.join(GenericIndicators.typeProportion(buForTypes, rsu.select("id_rsu"),
-        "id_rsu", "type", WorkflowRunner.TebTypeComposition,
-        WorkflowRunner.TebTypeComposition), Seq("id_rsu"), "left")
+    // building total fraction (LCZ || UTRF): input of the aspect ratio
+    val bfCols = BuildingFractions.filter(fracCols)
+    val totalFraction = (if (bfCols.isEmpty) lit(0.0) else bfCols.map(col).reduce(_ + _))
+      .as("building_total_fraction")
+    out = out.join(fractions.select(fractions.columns.filter(_ != "the_geom").map(col) ++
+      (if (utrf) comboSum(UtrfSurfFraction) else Nil) ++
+      (if (lcz) comboSum(LczSurfFraction) else Nil) ++
+      (if (lcz || utrf) Seq(totalFraction) else Nil): _*), Seq("id_rsu"), "left")
 
     // -- rsu area (UTRF) ----------------------------------------------------
     if (utrf) out = out.withColumn("area", G.stArea(col("the_geom")))
@@ -219,48 +237,6 @@ object WorkflowChain {
         .sliding(2).collect { case Seq(a, b) => (a, b) }.toSeq
       out = out.join(RsuIndicators.roofFractionDistributionExact(rsu,
         bu.select("the_geom", "height_roof"), bounds, grid, res), Seq("id_rsu"), "left")
-    }
-
-    // -- free external facade density (LCZ || UTRF) -------------------------
-    if (lcz || utrf)
-      out = out.join(RsuIndicators.freeExternalFacadeDensity(
-        bu.select("id_rsu", "contiguity", "total_facade_length", "height_wall"), rsu),
-        Seq("id_rsu"), "left")
-
-    // -- unweighted building statistics -------------------------------------
-    import GenericIndicators._
-    var ops = Map("floor_area" -> Seq[UnweightedOp](OpDens))
-    if (lcz) ops = merge(ops, Map("height_roof" -> Seq(OpGeomAvg)))
-    if (utrf) {
-      ops = merge(ops, Map("volume" -> Seq(OpDens, OpAvg),
-        "height_roof" -> Seq(OpGeomAvg),
-        "number_building_neighbor" -> Seq(OpAvg),
-        "minimum_building_spacing" -> Seq(OpAvg),
-        "building" -> Seq(OpNbDens)))
-      if (bu.columns.contains("pop")) ops = merge(ops, Map("pop" -> Seq(OpSum, OpDens)))
-    }
-    if (teb) ops = merge(ops, Map("height_roof" -> Seq(OpGeomAvg, OpAvg, OpStd)))
-    val statCols = (ops.keySet - "building").toSeq.filter(bu.columns.contains) :+ "id_rsu" :+ "id_build"
-    val unweighted = unweightedOperationFromLowerScale(
-      bu.select(statCols.distinct.map(col): _*),
-      rsu.select("id_rsu", "the_geom"), "id_rsu", "id_build",
-      ops.filter { case (k, _) => k == "building" || bu.columns.contains(k) })
-      .withColumnRenamed("floor_area_density", "building_floor_area_density")
-      .withColumnRenamed("volume_density", "building_volume_density")
-      .localCheckpoint()
-    out = out.join(unweighted, Seq("id_rsu"), "left")
-
-    // -- weighted height stats (LCZ || UTRF) --------------------------------
-    if (lcz || utrf) {
-      val w = bu.withColumn("barea", G.stArea(col("the_geom")))
-        .select("id_rsu", "height_roof", "nb_lev", "barea")
-      out = out.join(GenericIndicators.weightedAggregatedStatistics(w,
-        rsu.select("id_rsu"), "id_rsu",
-        Seq(("height_roof", "barea"), ("nb_lev", "barea")))
-        .withColumnRenamed("avg_height_roof_barea_weighted", "avg_height_roof_area_weighted")
-        .withColumnRenamed("std_height_roof_barea_weighted", "std_height_roof_area_weighted")
-        .withColumnRenamed("avg_nb_lev_barea_weighted", "avg_nb_lev_area_weighted")
-        .drop("std_nb_lev_barea_weighted"), Seq("id_rsu"), "left")
     }
 
     // -- road operations (UTRF || TEB) --------------------------------------
@@ -287,17 +263,12 @@ object WorkflowChain {
       else None
     projDist.foreach(p => out = out.join(p, Seq("id_rsu"), "left"))
 
-    // -- building total fraction + aspect ratio (LCZ || UTRF) ---------------
-    if (lcz || utrf) {
-      val bfCols = BuildingFractions.filter(fracCols)
-      val total = fractions.select(col("id_rsu"),
-        (if (bfCols.isEmpty) lit(0.0) else bfCols.map(col).reduce(_ + _))
-          .as("building_total_fraction"))
-      out = out.join(total, Seq("id_rsu"), "left")
+    // -- aspect ratio (LCZ || UTRF) -----------------------------------------
+    if (lcz || utrf)
       out = out.join(RsuIndicators.aspectRatio(
-        out.select("id_rsu", "free_external_facade_density", "building_total_fraction"),
+        perRsu.select("id_rsu", "free_external_facade_density")
+          .join(fractions.select(col("id_rsu"), totalFraction), Seq("id_rsu"), "left"),
         "free_external_facade_density", "building_total_fraction"), Seq("id_rsu"), "left")
-    }
 
     // -- sky view factor (LCZ) ----------------------------------------------
     if (lcz) {
@@ -317,20 +288,13 @@ object WorkflowChain {
       val facadeCols = projDist.get.columns.filter(
         _.startsWith("projected_facade_area_distribution_")).toSeq
       val z0 = RsuIndicators.effectiveTerrainRoughnessLength(
-        projDist.get.join(unweighted.select("id_rsu", "geom_avg_height_roof"), "id_rsu")
-          .join(rsu, "id_rsu"),
+        projDist.get.join(perRsu.select("id_rsu", "the_geom", "geom_avg_height_roof"), "id_rsu"),
         facadeCols, "geom_avg_height_roof").localCheckpoint()
       out = out.join(z0, Seq("id_rsu"), "left")
       if (lcz)
         out = out.join(RsuIndicators.effectiveTerrainRoughnessClass(z0,
           "effective_terrain_roughness_length"), Seq("id_rsu"), "left")
     }
-
-    // -- building direction distribution (UTRF) -----------------------------
-    if (utrf)
-      out = out.join(GenericIndicators.buildingDirectionDistribution(
-        bu.select("id_build", "id_rsu", "the_geom"), rsu.select("id_rsu"),
-        "id_rsu", angleRangeSizeBuDirection), Seq("id_rsu"), "left")
 
     out
   }
@@ -361,16 +325,13 @@ object WorkflowChain {
     val blockCols = blockIndics.columns.filterNot(c => BlockColToRemove(c.toLowerCase)).toSeq
     targetedScale.toUpperCase match {
       case "RSU" =>
-        val buAgg = unweightedOperationFromLowerScale(
-          buildingIndics.select(("id_rsu" +: "id_build" +: buildCols).distinct.map(col): _*),
-          rsuIndics.select("id_rsu"), "id_rsu", "id_build",
-          buildCols.map(c => c -> Seq[UnweightedOp](OpAvg, OpStd)).toMap)
+        val rsuIds = rsuIndics.select("id_rsu")
+        val buAgg = perUnit(buildingIndics, rsuIds, "id_rsu")(unweightedOperationFromLowerScale(
+          "id_build", buildCols.map(c => c -> Seq[UnweightedOp](OpAvg, OpStd)).toMap))
         val buRenamed = buAgg.columns.foldLeft(buAgg) { (df, c) =>
           if (c == "id_rsu") df else df.withColumnRenamed(c, s"build_$c") }
-        val blAgg = unweightedOperationFromLowerScale(
-          blockIndics.select(("id_rsu" +: "id_block" +: blockCols).distinct.map(col): _*),
-          rsuIndics.select("id_rsu"), "id_rsu", "id_block",
-          blockCols.map(c => c -> Seq[UnweightedOp](OpAvg, OpStd)).toMap)
+        val blAgg = perUnit(blockIndics, rsuIds, "id_rsu")(unweightedOperationFromLowerScale(
+          "id_block", blockCols.map(c => c -> Seq[UnweightedOp](OpAvg, OpStd)).toMap))
         val blRenamed = blAgg.columns.foldLeft(blAgg) { (df, c) =>
           if (c == "id_rsu") df else df.withColumnRenamed(c, s"block_$c") }
         rsuIndics.join(buRenamed, Seq("id_rsu"), "left")

@@ -93,10 +93,6 @@ object WorkflowConfig {
 
   def parse(json: String): Params = extract(new ObjectMapper().readTree(json))
 
-  def parseFile(path: String): Params =
-    parse(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8))
-
   private def extract(root: JsonNode): Params = {
     if (root == null || root.isNull) return Defaults
     var p = Defaults

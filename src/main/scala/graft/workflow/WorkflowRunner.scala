@@ -75,10 +75,9 @@ object WorkflowRunner {
           .select("id_build", "contiguity", "number_building_neighbor"), "id_build")
     }
     val rsuStats = staged("rsu_stats") {
-      GenericIndicators.unweightedOperationFromLowerScale(
-        bInd.join(rel, "id_build").select(col("id_rsu"), col("volume"), col("id_build")),
-        tsu.select(col("id_rsu")), "id_rsu", "id_build",
-        Map("volume" -> Seq(GenericIndicators.OpAvg, GenericIndicators.OpSum)))
+      GenericIndicators.perUnit(bInd.join(rel, "id_build"), tsu.select(col("id_rsu")), "id_rsu")(
+        GenericIndicators.unweightedOperationFromLowerScale("id_build",
+          Map("volume" -> Seq(GenericIndicators.OpAvg, GenericIndicators.OpSum))))
     }
     val traffic = // gated by config AND the presence of a road layer (the
       // reference computes traffic only when the road table exists)
@@ -337,37 +336,48 @@ object WorkflowRunner {
     if (inds.contains("LAND_TYPE_FRACTION")) fractions.foreach(join)
 
     // ---- unweighted building stats over the all-intersections relation ----
-    val needUnweighted = scala.collection.mutable.LinkedHashSet.empty[GenericIndicators.UnweightedOp]
-    if (inds.contains("BUILDING_HEIGHT")) {
-      needUnweighted += GenericIndicators.OpAvg; needUnweighted += GenericIndicators.OpStd
-    }
+    import GenericIndicators._
+    val needUnweighted = scala.collection.mutable.LinkedHashSet.empty[UnweightedOp]
+    if (inds.contains("BUILDING_HEIGHT")) { needUnweighted += OpAvg; needUnweighted += OpStd }
     if (inds.exists(Set("HEIGHT_OF_ROUGHNESS_ELEMENTS", "TERRAIN_ROUGHNESS")))
-      needUnweighted += GenericIndicators.OpGeomAvg
+      needUnweighted += OpGeomAvg
     // building↔cell relation reused by several blocks; ids + attrs only
     lazy val rel = SpatialJoin.intersectsJoin(
         layers.building.withColumnRenamed("the_geom", "__bg"), "__bg",
         cells.select(col("id_grid"), col("the_geom").as("__cg")), "__cg", grid, res)
       .drop("__cg").withColumnRenamed("__bg", "the_geom")
       .localCheckpoint()
+    val cellGeoms = cells.select("id_grid", "the_geom")
     val buildingStats: Option[DataFrame] =
       if (needUnweighted.nonEmpty) {
-        Some(GenericIndicators.unweightedOperationFromLowerScale(
-          rel.select(col("id_grid"), col("height_roof"), col("id_build")),
-          cells.select("id_grid", "the_geom"), "id_grid", "id_build",
-          Map("height_roof" -> needUnweighted.toSeq)).localCheckpoint())
+        Some(perUnit(rel, cellGeoms, "id_grid")(unweightedOperationFromLowerScale("id_build",
+          Map("height_roof" -> needUnweighted.toSeq))).drop("the_geom").localCheckpoint())
       } else None
     buildingStats.foreach(join)
 
-    // ---- cut-building blocks (:1946-2012) ---------------------------------
-    val needsCut = inds.exists(Set("BUILDING_DIRECTION", "BUILDING_NUMBER",
-      "BUILDING_HEIGHT_WEIGHTED", "STREET_WIDTH", "BUILDING_TYPE_FRACTION",
-      "BUILDING_HEIGHT_DISTRIBUTION"))
-    lazy val cut = cutBuilding(cells.select("id_grid", "the_geom"),
-      layers.building, grid, res).localCheckpoint()
+    // ---- cut-building families, one aggregate over the cut (:1946-2012) ---
+    val needsWeighted = inds.exists(Set("BUILDING_HEIGHT_WEIGHTED", "STREET_WIDTH"))
+    val cutFamilies = Seq(
+      inds.contains("BUILDING_NUMBER") ->
+        unweightedOperationFromLowerScale("id_build", Map("building" -> Seq(OpNbDens))),
+      inds.contains("BUILDING_DIRECTION") -> buildingDirectionDistribution(angleRangeSize = 30),
+      needsWeighted -> weightedAggregatedStatistics(Seq(("height_roof", "area"))),
+      (inds.contains("BUILDING_TYPE_FRACTION") && layers.building.columns.contains("type")) ->
+        typeProportion("type", typeComposition, floorTypeComposition))
+      .collect { case (true, f) => f }
+    lazy val cut = cutBuilding(cellGeoms, layers.building, grid, res).localCheckpoint()
+    // checkpointed when the weighted stats also feed STREET_WIDTH
+    val perCell: Option[DataFrame] = if (cutFamilies.isEmpty) None else Some {
+      val agg = perUnit(if (cut.columns.contains("nb_lev")) cut else cut.withColumn("nb_lev", lit(1)),
+        cellGeoms, "id_grid")(cutFamilies: _*).drop("the_geom")
+      if (needsWeighted) agg.localCheckpoint() else agg
+    }
+    perCell.foreach { c => // STREET_WIDTH alone reads the weighted stats but emits none
+      val keep = c.columns.filter(n => inds.contains("BUILDING_HEIGHT_WEIGHTED") ||
+        !Set("avg_height_roof_area_weighted", "std_height_roof_area_weighted")(n))
+      if (keep.length > 1) join(c.select(keep.map(col): _*))
+    }
     if (inds.contains("BUILDING_NUMBER")) {
-      join(GenericIndicators.unweightedOperationFromLowerScale(
-        cut.select("id_grid", "id_build"), cells.select("id_grid", "the_geom"),
-        "id_grid", "id_build", Map("building" -> Seq(GenericIndicators.OpNbDens))))
       // piece ids must be DETERMINISTIC (CC labels are min-over-component of
       // them, and the vertices/edges scans must agree): hash the natural key
       val blocksCut = ConnectedComponents.createBlocks(cut
@@ -376,27 +386,9 @@ object WorkflowRunner {
       val blockRel = SpatialJoin.intersectsJoin(
           blocksCut.select(col("id_block"), col("the_geom").as("__blk")), "__blk",
           cells.select(col("id_grid"), col("the_geom").as("__cg")), "__cg", grid, res)
-      join(GenericIndicators.unweightedOperationFromLowerScale(
-        blockRel.select("id_grid", "id_block"), cells.select("id_grid", "the_geom"),
-        "id_grid", "id_block", Map("block" -> Seq(GenericIndicators.OpNbDens))))
+      join(perUnit(blockRel, cellGeoms, "id_grid")(unweightedOperationFromLowerScale("id_block",
+        Map("block" -> Seq(OpNbDens)))).drop("the_geom"))
     }
-    if (inds.contains("BUILDING_DIRECTION"))
-      join(GenericIndicators.buildingDirectionDistribution(
-        cut.select("id_build", "id_grid", "the_geom"), cells.select("id_grid"),
-        "id_grid", angleRangeSize = 30))
-    val weighted: Option[DataFrame] =
-      if (inds.exists(Set("BUILDING_HEIGHT_WEIGHTED", "STREET_WIDTH")))
-        Some(GenericIndicators.weightedAggregatedStatistics(
-          cut.select("id_grid", "height_roof", "area"), cells.select("id_grid"),
-          "id_grid", Seq(("height_roof", "area"))).localCheckpoint())
-      else None
-    if (inds.contains("BUILDING_HEIGHT_WEIGHTED")) weighted.foreach(join)
-    if (inds.contains("BUILDING_TYPE_FRACTION") && layers.building.columns.contains("type"))
-      join(GenericIndicators.typeProportion(
-        cut.select(col("id_grid"), col("type"), col("the_geom"),
-          (if (cut.columns.contains("nb_lev")) col("nb_lev") else lit(1)).as("nb_lev")),
-        cells.select("id_grid"), "id_grid", "type",
-        typeComposition, floorTypeComposition))
 
     // ---- exact facade density + aspect ratio + street width + BSD ---------
     if (inds.exists(Set("FREE_EXTERNAL_FACADE_DENSITY", "ASPECT_RATIO",
@@ -423,8 +415,8 @@ object WorkflowRunner {
         val ar = RsuIndicators.aspectRatio(forAr,
           "free_external_facade_density", "__bf", "id_grid").localCheckpoint()
         join(ar)
-        if (inds.contains("STREET_WIDTH") && weighted.isDefined) {
-          val forSw = weighted.get.join(ar, Seq("id_grid"))
+        if (inds.contains("STREET_WIDTH")) {
+          val forSw = perCell.get.join(ar, Seq("id_grid"))
           join(RsuIndicators.streetWidth(forSw,
             "avg_height_roof_area_weighted", "aspect_ratio", "id_grid"))
         }

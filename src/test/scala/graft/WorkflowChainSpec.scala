@@ -51,10 +51,9 @@ class WorkflowChainSpec extends SparkTestBase {
     val bsize = BuildingIndicators.sizeProperties(building)
     // 6. RSU-scale aggregation of a building indicator
     val lower = bsize.join(rel, "id_build")
-    val rsuAgg = GenericIndicators.unweightedOperationFromLowerScale(
-      lower.select(col("id_rsu"), col("volume"), col("id_build")),
-      tsu.select(col("id_rsu")), "id_rsu", "id_build",
-      Map("volume" -> Seq(GenericIndicators.OpAvg, GenericIndicators.OpSum)))
+    val rsuAgg = GenericIndicators.perUnit(lower, tsu.select(col("id_rsu")), "id_rsu")(
+      GenericIndicators.unweightedOperationFromLowerScale("id_build",
+        Map("volume" -> Seq(GenericIndicators.OpAvg, GenericIndicators.OpSum))))
     (tsu, blocks, rel, rsuAgg)
   }
 

@@ -63,10 +63,4 @@ class GeoSpec extends AnyFunSuite {
         Geo.fromWkb(poly).contains(Geo.point(x, y)))
     }
   }
-
-  test("precision reduce to 3 decimals") {
-    val g = Geo.fromWkt("POLYGON((0 0, 10.00049 0, 10.00049 10, 0 10, 0 0))")
-    val r = Geo.precisionReduce(g, 3)
-    assert(r.getEnvelopeInternal.getMaxX == 10.0)
-  }
 }

@@ -93,11 +93,6 @@ class CellGridSpec extends AnyFunSuite {
     assert(cells.contains(g.cell(30, 10, 12)))
   }
 
-  test("resForCellSize picks the coarsest res at or below target") {
-    val res = g.resForCellSize(50.0)
-    assert(g.cellSize(res) <= 50.0 && g.cellSize(res - 1) > 50.0)
-  }
-
   test("ids at different resolutions never collide") {
     props(500) { r =>
       val x = coord(r); val y = coord(r); val res = r.nextInt(20)

@@ -12,7 +12,8 @@ class DirectionSpec extends SparkTestBase {
   test("block 4 goldens: equality 4/12, main ang97_5, uniqueness 6/50") {
     val b = GeoFixture.buildingDf(spark).where($"id_build" < 9 && $"id_block".isNotNull)
     val blocks = GeoFixture.blockDf(spark)
-    val out = GenericIndicators.buildingDirectionDistribution(b, blocks, "id_block", 15)
+    val out = GenericIndicators.perUnit(b, blocks.select("id_block"), "id_block")(
+        GenericIndicators.buildingDirectionDistribution(15))
       .where($"id_block" === 4).head()
     assert(math.abs(out.getAs[Double]("building_direction_equality") - 4.0 / 12) < 1e-4)
     assert(out.getAs[String]("main_building_direction") == "ang97_5")
@@ -21,7 +22,8 @@ class DirectionSpec extends SparkTestBase {
 
   test("empty upper unit -> -1 / unknown") {
     val b = GeoFixture.buildingDf(spark).where($"id_build" < 9 && $"id_rsu".isNotNull)
-    val out = GenericIndicators.buildingDirectionDistribution(b, GeoFixture.rsuDf(spark), "id_rsu", 15)
+    val out = GenericIndicators.perUnit(b, GeoFixture.rsuDf(spark).select("id_rsu"), "id_rsu")(
+        GenericIndicators.buildingDirectionDistribution(15))
       .where($"id_rsu" === 14).head()
     assert(out.getAs[Double]("building_direction_equality") == -1.0)
     assert(out.getAs[String]("main_building_direction") == "unknown")

@@ -77,8 +77,9 @@ class IndicatorsSpec extends SparkTestBase {
   }
 
   test("block holeAreaDensity golden (block 6 = 3/47)") {
-    val out = BlockIndicators.holeAreaDensity(
-      GeoFixture.blockDf(spark).where(col("id_block") === 6))
+    val out = GenericIndicators.perUnit(buildings,
+      GeoFixture.blockDf(spark).where(col("id_block") === 6).select("id_block", "the_geom"),
+      "id_block")(BlockIndicators.holeAreaDensity)
       .agg(sum("hole_area_density")).head().getDouble(0)
     assert(math.abs(out - 3.0 / 47) < 1e-5)
   }
@@ -92,15 +93,16 @@ class IndicatorsSpec extends SparkTestBase {
       .join(size.select("id_build", "volume"), "id_build")
       .join(nb.select("id_build", "contiguity"), "id_build")
       .where(col("id_block").isNotNull)
-    val out = BlockIndicators.netCompactness(enriched)
+    val out = GenericIndicators.perUnit(enriched, enriched.select("id_block").distinct(),
+        "id_block")(BlockIndicators.netCompactness)
       .collect().map(r => r.getAs[Int]("id_block") -> r.getAs[Double]("net_compactness")).toMap
     assert(math.abs(out(4) - 0.51195) < 1e-5)
   }
 
   test("block closingness golden (block 8 encloses hole not covered by building holes)") {
-    val out = BlockIndicators.closingness(
+    val out = GenericIndicators.perUnit(
       buildings.where(col("id_build").isNotNull && col("id_block").isNotNull),
-      GeoFixture.blockDf(spark))
+      GeoFixture.blockDf(spark).select("id_block", "the_geom"), "id_block")(BlockIndicators.closingness)
       .collect().map(r => r.getAs[Int]("id_block") -> r.getAs[Double]("closingness")).toMap
     // block 6 = building 7: holes cancel -> 0
     assert(out(6) == 0.0)
@@ -113,8 +115,8 @@ class IndicatorsSpec extends SparkTestBase {
     val corr = GeoFixture.rsuBuildCorrDf(spark).select("id_rsu", "id_build")
     val lower = buildings.drop("id_rsu").join(corr, "id_build").where(col("id_build") <= 8)
     val upper = GeoFixture.rsuDf(spark).select("id_rsu", "the_geom")
-    val out = unweightedOperationFromLowerScale(lower, upper, "id_rsu", "id_build",
-      Map("height_wall" -> Seq(OpAvg, OpSum, OpStd, OpGeomAvg, OpNbDens)))
+    val out = perUnit(lower, upper, "id_rsu")(unweightedOperationFromLowerScale("id_build",
+      Map("height_wall" -> Seq(OpAvg, OpSum, OpStd, OpGeomAvg, OpNbDens))))
       .collect().map(r => r.getAs[Int]("id_rsu") -> r).toMap
     // rsu 1 holds buildings 1..5,8: heights 8,10,8,5,12,4
     val hs = Seq(8.0, 10.0, 8.0, 5.0, 12.0, 4.0)
@@ -134,8 +136,8 @@ class IndicatorsSpec extends SparkTestBase {
     val lower = buildings.where(col("id_build") <= 8).where(col("id_rsu").isNotNull)
       .withColumn("area", graft.geom.GeoFunctions.stArea(col("the_geom")))
     val upper = GeoFixture.rsuDf(spark).select("id_rsu")
-    val out = GenericIndicators.weightedAggregatedStatistics(lower, upper, "id_rsu",
-      Seq(("height_wall", "area")))
+    val out = GenericIndicators.perUnit(lower, upper, "id_rsu")(
+      GenericIndicators.weightedAggregatedStatistics(Seq(("height_wall", "area"))))
       .collect().map(r => r.getAs[Int]("id_rsu") -> r).toMap
     // rsu1: buildings 1-5,8 areas 156,40,100,180,130,75; heights 8,10,8,5,12,4
     val aw = Seq((156.0, 8.0), (40.0, 10.0), (100.0, 8.0), (180.0, 5.0), (130.0, 12.0), (75.0, 4.0))
@@ -150,9 +152,9 @@ class IndicatorsSpec extends SparkTestBase {
     val lower2 = buildings.drop("id_rsu").join(GeoFixture.rsuBuildCorrDf(spark).select("id_rsu", "id_build"), "id_build")
       .where(col("id_build") <= 8)
     val upper = GeoFixture.rsuDf(spark).select(col("id_rsu"))
-    val out = GenericIndicators.typeProportion(lower2, upper, "id_rsu", "type",
-      Map("residential" -> Seq("residential"), "industrial" -> Seq("industrial"),
-        "undefined" -> Seq("detached")))
+    val out = GenericIndicators.perUnit(lower2, upper, "id_rsu")(GenericIndicators.typeProportion(
+      "type", Map("residential" -> Seq("residential"), "industrial" -> Seq("industrial"),
+        "undefined" -> Seq("detached"))))
       .collect().map(r => r.getAs[Int]("id_rsu") -> r).toMap
     // rsu1 areas: res 100+180+130+75=485, industrial 156, detached 40; tot 681
     assert(math.abs(out(1).getAs[Double]("area_fraction_residential") - 485.0 / 681) < 1e-12)

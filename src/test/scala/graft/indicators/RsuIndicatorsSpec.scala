@@ -43,7 +43,8 @@ class RsuIndicatorsSpec extends SparkTestBase {
     val enriched = b.select("id_build", "id_rsu", "height_wall")
       .join(nb.select("id_build", "contiguity"), "id_build")
       .join(size.select("id_build", "total_facade_length"), "id_build")
-    val out = RsuIndicators.freeExternalFacadeDensity(enriched, GeoFixture.rsuDf(spark))
+    val out = GenericIndicators.perUnit(enriched, GeoFixture.rsuDf(spark).select("id_rsu", "the_geom"),
+        "id_rsu")(RsuIndicators.freeExternalFacadeDensity)
       .collect().map(r => r.getAs[Int]("id_rsu") -> r.getAs[Double]("free_external_facade_density")).toMap
     assert(math.abs(out(1) - 0.947) < 5e-4)
     assert(out(14) == 0.0) // empty RSU default

@@ -513,6 +513,18 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(got(2L) == (("4 4 2 2 2", 5L, 2L)))   // ff, dd UNK; zz in vocab
   }
 
+  test("Vocab.encode runs its fused kernel once per row") {
+    // the three struct fields read one projected kernel; over a local
+    // relation the kernel is folded at planning, so the source is an RDD
+    import spark.implicits._
+    val docs = spark.sparkContext.parallelize(Seq(0L -> "aa bb", 1L -> "bb cc dd"))
+      .toDF("doc_id", "text")
+    val plan = Vocab.encode(docs, "doc_id", "text", Vocab.build(docs, "text", 2))
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case p => p.expressions.map(_.collect {
+      case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u }.size).sum }.sum == 1, plan)
+  }
+
   test("PQ: brute-force encode (argmin L2, low-code ties) and ADC scores") {
     import spark.implicits._
     // 8 vectors in 4 dims, m=2 subspaces of 2 dims; codebooks seed from the

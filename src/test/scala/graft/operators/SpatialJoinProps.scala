@@ -82,6 +82,15 @@ class SpatialJoinProps extends SparkTestBase {
     assert(joined(Seq(a), Seq(b)).toSeq == Seq((0L, 0L)))
   }
 
+  test("a null geometry on either side gets no cells and joins nothing") {
+    val a = Geo.box(0, 0, 100, 100); val b = Geo.box(50, 50, 150, 150)
+    val as = Seq(a, null); val bs = Seq(null, b)
+    val cands = SpatialJoin.candidates(df(as, "ia", "ga"), "ga", df(bs, "ib", "gb"), "gb",
+      grid, Res).select("ia", "ib").as[(Long, Long)].collect()
+    assert(cands.toSeq == Seq((0L, 1L)))
+    assert(joined(as, bs).toSeq == Seq((0L, 1L)))
+  }
+
   test("intersectsJoin returns exactly the JTS-intersecting pairs, each once") {
     check(Prop.forAllNoShrink(layer(shapes), layer(shapes)) { (as, bs) =>
       val got = joined(as, bs)
