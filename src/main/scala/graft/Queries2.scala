@@ -141,10 +141,18 @@ object Queries2 {
     s.range(0, 4).toDF("id_rsu").withColumn("the_geom",
       G.stMakeBox(lit(0.0), col("id_rsu") * 20.0, lit(200.0), (col("id_rsu") + 1) * 20.0))
 
-  private def facDist(s: SparkSession, dir: String): DataFrame =
-    RsuIndicators.projectedFacadeAreaDistribution(
-      rectLayer(s, dir).select("id_build", "the_geom", "height_wall"),
-      facBands(s), grid, Res, FacLayers, numDirection = 6)
+  private def facDist(s: SparkSession, dir: String): DataFrame = {
+    val b = rectLayer(s, dir).select("id_build", "the_geom", "height_wall")
+    RsuIndicators.projectedFacadeAreaDistribution(b, RsuIndicators.buildingNeighbours(b, grid, Res),
+      RsuIndicators.unitPairs(b, facBands(s), "id_rsu", grid, Res), facBands(s),
+      FacLayers, numDirection = 6)
+  }
+
+  /** The buildings' pairs with the facade bands, kept where the band is the
+    * building's own `id_rsu` (the oracle's y0 / 20 correlation). */
+  private def ownBandPairs(s: SparkSession, b: DataFrame): DataFrame =
+    RsuIndicators.unitPairs(b.drop("id_rsu"), facBands(s), "id_rsu", grid, Res)
+      .join(b.select("id_build", "id_rsu"), Seq("id_build", "id_rsu"))
 
   /** Facade rows of the rect layer as SQL: per-edge free lengths (party
     * intervals subtracted), party-wall strips once (a<b), corner-touch-only
@@ -389,8 +397,11 @@ object Queries2 {
     "rsu_roof_fractions" -> ((s, dir) => {
       val zones = Tiling.makeGrid(s, 0, 0, 150, 150, 50, 50)
         .select(col("id_grid").as("id_rsu"), col("the_geom"))
-      RsuIndicators.roofFractionDistributionExact(zones, scatterRects(s, dir),
-        Seq((0.0, 5.0), (5.0, 12.0), (12.0, 50.0)), grid, Res)
+      val pieces = RsuIndicators.unitPairs(scatterRects(s, dir).select("the_geom", "height_roof"),
+          zones, "id_rsu", grid, Res)
+        .withColumn("area", G.stIntersectionArea(col("unit_geom"), col("the_geom")))
+      RsuIndicators.roofFractionDistributionExact(zones, pieces,
+        Seq((0.0, 5.0), (5.0, 12.0), (12.0, 50.0)))
         .select(col("id_rsu"),
           round(col("roof_fraction_distribution_h0_5"), 9).as("roof_fraction_distribution_h0_5"),
           round(col("roof_fraction_distribution_h5_12"), 9).as("roof_fraction_distribution_h5_12"),
@@ -603,7 +614,8 @@ object Queries2 {
         .select("id_build", "id_rsu", "the_geom", "height_wall")
       val names = for (l <- Seq("h0_5", "h5_10", "h10_13"); k <- 0 until 4)
         yield s"frontal_area_index_${l}_d${k * 90}_${(k + 1) * 90}"
-      RsuIndicators.frontalAreaIndexDistribution(b, facBands(s), Seq(0, 5, 10), 4)
+      RsuIndicators.frontalAreaIndexDistribution(ownBandPairs(s, b), facBands(s), grid, Res,
+          Seq(0, 5, 10), 4)
         .select(col("id_rsu") +: names.map(n => round(col(n), 6).as(n)): _*)
         .orderBy("id_rsu")
     }),
@@ -639,7 +651,7 @@ object Queries2 {
     "rsu_overlay_fractions" -> ((s, dir) => {
       val zones = Tiling.makeGrid(s, 0, 0, 150, 150, 50, 50)
         .select(col("id_grid").as("id_rsu"), col("the_geom"))
-      val b = rectLayer(s, dir).select("the_geom")
+      val b = RsuIndicators.unitPairs(rectLayer(s, dir).select("the_geom"), zones, "id_rsu", grid, Res)
       val veg = t(s, dir, "documents").where(col("doc_id") < 400).select(
         (col("doc_id") % 20 * 7).cast("double").as("vx"),
         (floor(col("doc_id") / 20) % 20 * 7).cast("double").as("vy"),
@@ -708,7 +720,7 @@ object Queries2 {
         .withColumn("id_rsu", floor(col("y0") / 20).cast("long"))
         .where(col("id_rsu") < 4)
         .select("id_build", "id_rsu", "the_geom", "height_wall")
-      RsuIndicators.freeExternalFacadeDensityExact(b, facBands(s))
+      RsuIndicators.freeExternalFacadeDensityExact(ownBandPairs(s, b), facBands(s))
         .select(col("id_rsu"),
           round(col("free_external_facade_density"), 9).as("free_external_facade_density"))
         .orderBy("id_rsu")
@@ -724,7 +736,10 @@ object Queries2 {
       val names = Seq("non_vert_roof_area_h0_5", "non_vert_roof_area_h5_10",
         "non_vert_roof_area_h10", "vert_roof_area_h0_5", "vert_roof_area_h5_10",
         "vert_roof_area_h10", "vert_roof_density", "non_vert_roof_density")
-      RsuIndicators.roofAreaDistribution(facBands(s), b, Seq(0, 5, 10), grid, Res)
+      val geom = b.drop("id_rsu")
+      RsuIndicators.roofAreaDistribution(facBands(s), b,
+          RsuIndicators.unitPairs(geom, facBands(s), "id_rsu", grid, Res),
+          RsuIndicators.buildingNeighbours(geom, grid, Res), Seq(0, 5, 10))
         .select(col("id_rsu") +: names.map(n => round(col(n), 6).as(n)): _*)
         .orderBy("id_rsu")
     }),

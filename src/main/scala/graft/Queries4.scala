@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.geom.{GeoFunctions => G}
 import graft.index.CellGrid
 import graft.ml.RandomForest
-import graft.indicators.{GridIndicators, Svf}
+import graft.indicators.{GridIndicators, RsuIndicators, Svf}
 import graft.operators.{SpatialUnits, Tiling}
 import graft.sources.OsmFormatting
 
@@ -188,8 +188,9 @@ object Queries4 {
     //    groovy:219-348; deterministic Halton sampling replaces the
     //    reference's unseeded random ST_GENERATEPOINTS, see Svf scaladoc) --
     "rsu_svf_exact" -> ((s, dir) => {
-      Svf.groundSkyViewFactor(svfRsu(s), svfBuildings(s, dir), grid, Res,
-          pointDensity = SvfDensity, rayLength = 100.0, numberOfDirection = SvfDirs)
+      val b = svfBuildings(s, dir)
+      Svf.groundSkyViewFactor(svfRsu(s), RsuIndicators.unitPairs(b, svfRsu(s), "id_rsu", grid, Res),
+          b, grid, Res, pointDensity = SvfDensity, rayLength = 100.0, numberOfDirection = SvfDirs)
         .select(col("id_rsu"), round(col("ground_sky_view_factor"), 6).as("ground_sky_view_factor"))
         .orderBy("id_rsu")
     }),
@@ -297,12 +298,16 @@ object Queries4 {
         when(d % 6 === 0, "1").otherwise(lit(null).cast("string")).as("r_lev"),
         element_at(lit(Array("residential", "house", "commercial", "industrial")),
           (d % 4).cast("int") + 1).as("type"))
-      val hr = OsmFormatting.heightRoof(col("height"))
+      // the parsed roof height is staged into its own column, so heightWall
+      // and formatHeights read an attribute: inlined, its regex tree repeats
+      // until the generated Java no longer compiles
+      val hr = col("__hr")
       val hw = OsmFormatting.heightWall(hr, col("roof_height"))
       val nl = OsmFormatting.nbLevels(col("b_lev"), col("r_lev"))
       val fh = OsmFormatting.formatHeights(hw, hr, nl, 3.0, col("type"),
         Map("residential" -> 1, "house" -> 1, "commercial" -> 2))
-      raw.select(col("id_build"), fh.as("__f"))
+      raw.withColumn("__hr", OsmFormatting.heightRoof(col("height")))
+        .select(col("id_build"), fh.as("__f"))
         .select(col("id_build"),
           round(col("__f.height_wall"), 6).as("height_wall"),
           round(col("__f.height_roof"), 6).as("height_roof"),

@@ -158,7 +158,7 @@ object Queries6 {
     s"lczcls(class_idx, class_id) AS (VALUES $vals)"
   }
 
-  /** Border-crossing strip buildings (literal): exercise the cutBuilding
+  /** Border-crossing strip buildings (literal): exercise the cut-building
     * path — each strip spans two cells horizontally, pieces touch at the
     * border (one connected block across cells). */
   private def strips(s: SparkSession): DataFrame = {

@@ -26,7 +26,6 @@ object GeoFunctions {
   val stPerimeter     = udf((b: Array[Byte]) => Geo.perimeter(Geo.fromWkb(b)))
   val stHolesArea     = udf((b: Array[Byte]) => Geo.holesArea(Geo.fromWkb(b)))
   val stHolesPerim    = udf((b: Array[Byte]) => Geo.holesPerimeter(Geo.fromWkb(b)))
-  val stNumGeometries = udf((b: Array[Byte]) => Geo.fromWkb(b).getNumGeometries)
   val stX             = udf((b: Array[Byte]) => Geo.fromWkb(b).getCoordinate.x)
   val stY             = udf((b: Array[Byte]) => Geo.fromWkb(b).getCoordinate.y)
 
@@ -34,7 +33,6 @@ object GeoFunctions {
   val stConvexHull   = udf((b: Array[Byte]) => Geo.toWkb(Geo.fromWkb(b).convexHull()))
   val stCentroid     = udf((b: Array[Byte]) => Geo.toWkb(Geo.fromWkb(b).getCentroid))
   val stPointOnSurf  = udf((b: Array[Byte]) => Geo.toWkb(Geo.fromWkb(b).getInteriorPoint))
-  val stEnvelope     = udf((b: Array[Byte]) => Geo.toWkb(Geo.fromWkb(b).getEnvelope))
   val stMakeValid    = udf((b: Array[Byte]) => Geo.toWkb(org.locationtech.jts.geom.util.GeometryFixer.fix(Geo.fromWkb(b))))
   val stBuffer       = udf((b: Array[Byte], d: Double) => Geo.toWkb(Geo.fromWkb(b).buffer(d)))
   val stBufferMitre  = udf((b: Array[Byte], d: Double) => Geo.toWkb(Geo.bufferMitre(Geo.fromWkb(b), d)))

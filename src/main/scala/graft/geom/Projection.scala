@@ -13,9 +13,8 @@ import org.apache.spark.sql.functions._
  * tmerc uses) — nanometre-level agreement with reference implementations,
  * no external library.
  *
- * Forward: conformal latitude via atanh/sinh, Gauss-Schreiber coordinates,
- * 6th-order alpha series; inverse: beta series back to conformal, then
- * Newton-free iteration-free closed inverse via the published series.
+ * Forward only: conformal latitude via atanh/sinh, Gauss-Schreiber
+ * coordinates, 6th-order alpha series.
  */
 object Projection {
 
@@ -40,15 +39,6 @@ object Projection {
     49561.0 / 161280 * n4 - 179.0 / 168 * n5 + 6601661.0 / 7257600 * n6,
     34729.0 / 80640 * n5 - 3418889.0 / 1995840 * n6,
     212378941.0 / 319334400 * n6)
-
-  /** Karney eq. 36 beta (inverse) coefficients, 6th order. */
-  private val Beta = Array(
-    N / 2 - 2.0 / 3 * n2 + 37.0 / 96 * n3 - 1.0 / 360 * n4 - 81.0 / 512 * n5 + 96199.0 / 604800 * n6,
-    1.0 / 48 * n2 + 1.0 / 15 * n3 - 437.0 / 1440 * n4 + 46.0 / 105 * n5 - 1118711.0 / 3870720 * n6,
-    17.0 / 480 * n3 - 37.0 / 840 * n4 - 209.0 / 4480 * n5 + 5569.0 / 90720 * n6,
-    4397.0 / 161280 * n4 - 11.0 / 504 * n5 - 830251.0 / 7257600 * n6,
-    4583.0 / 161280 * n5 - 108847.0 / 3991680 * n6,
-    20648693.0 / 638668800 * n6)
 
   private val K0 = 0.9996
   private val FalseEasting = 500000.0
@@ -79,34 +69,6 @@ object Projection {
     val e0 = FalseEasting + K0 * RectA * eta
     val n0 = (if (north) 0.0 else FalseNorthingSouth) + K0 * RectA * xi
     (e0, n0)
-  }
-
-  /** Inverse: (easting, northing) in a zone -> lon/lat degrees. */
-  def utmInverse(easting: Double, northing: Double, zone: Int, north: Boolean): (Double, Double) = {
-    val xi = (northing - (if (north) 0.0 else FalseNorthingSouth)) / (K0 * RectA)
-    val eta = (easting - FalseEasting) / (K0 * RectA)
-    var xiP = xi; var etaP = eta
-    var j = 1
-    while (j <= 6) {
-      xiP -= Beta(j - 1) * math.sin(2 * j * xi) * math.cosh(2 * j * eta)
-      etaP -= Beta(j - 1) * math.cos(2 * j * xi) * math.sinh(2 * j * eta)
-      j += 1
-    }
-    val lam = math.atan2(math.sinh(etaP), math.cos(xiP))
-    val tauP = math.sin(xiP) / math.sqrt(math.sinh(etaP) * math.sinh(etaP) + math.cos(xiP) * math.cos(xiP))
-    // invert conformal latitude by Newton iteration on tau (Karney eq. 19-21)
-    var tau = tauP
-    var i = 0
-    while (i < 8) {
-      val sig = math.sinh(E * atanh(E * tau / math.hypot(1.0, tau)))
-      val taui = tau * math.hypot(1.0, sig) - sig * math.hypot(1.0, tau)
-      val dtau = (tauP - taui) * (1 + (1 - E * E) * tau * tau) /
-        ((1 - E * E) * math.hypot(1.0, taui) * math.hypot(1.0, tau))
-      tau += dtau
-      i += 1
-    }
-    val phi = math.atan(tau)
-    (math.toDegrees(lam) + centralMeridianDeg(zone), math.toDegrees(phi))
   }
 
   @inline private def atanh(x: Double): Double = 0.5 * math.log((1 + x) / (1 - x))

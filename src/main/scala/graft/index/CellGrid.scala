@@ -98,33 +98,6 @@ final case class CellGrid(minX: Double, minY: Double, worldSize: Double) {
     Array(encode(ix, iy, res + 1), encode(ix + 1, iy, res + 1),
           encode(ix, iy + 1, res + 1), encode(ix + 1, iy + 1, res + 1))
   }
-  /** Ancestor of `id` at coarser resolution `res`. */
-  def ancestorAt(id: Long, res: Int): Long = {
-    val r = resOf(id); require(res <= r)
-    encode(ixOf(id) >> (r - res), iyOf(id) >> (r - res), res)
-  }
-
-  /** k-ring: all cells within Chebyshev distance k (same res), world-clamped. */
-  def kRing(id: Long, k: Int): Array[Long] = {
-    val res = resOf(id); val n = cellsPerAxis(res)
-    val ix = ixOf(id); val iy = iyOf(id)
-    val out = Array.newBuilder[Long]
-    var dy = -k
-    while (dy <= k) {
-      val y = iy + dy
-      if (y >= 0 && y < n) {
-        var dx = -k
-        while (dx <= k) {
-          val x = ix + dx
-          if (x >= 0 && x < n) out += encode(x, y, res)
-          dx += 1
-        }
-      }
-      dy += 1
-    }
-    out.result()
-  }
-
   /** All cells at `res` intersecting the envelope; none for a null
     * envelope (an empty geometry's), whose min > max would otherwise give
     * negative extents with a positive product. */
@@ -173,11 +146,6 @@ final case class CellGrid(minX: Double, minY: Double, worldSize: Double) {
     coverEnvelope(g.getEnvelopeInternal, minRes).foreach(descend)
     out.result()
   }
-
-  /** Cells at `res` within distance `r` of (x,y) — the k-ring-expansion kNN
-    * candidate set (BuildingIndicators.groovy:304-432 `ST_EXPAND` analogue). */
-  def cellsInRadius(x: Double, y: Double, r: Double, res: Int): Array[Long] =
-    coverEnvelope(new Envelope(x - r, x + r, y - r, y + r), res)
 }
 
 object CellGrid {

@@ -13,6 +13,25 @@ import graft.operators.SpatialJoin
  */
 object RsuIndicators {
 
+  /** The building × unit relation the spatial families read: one row per
+    * intersecting (building, unit) pair, the unit's id and `unit_geom` next
+    * to the columns of `building`. Callers build it once per chain and
+    * checkpoint it; the families take it as input and join nothing against
+    * the units themselves. */
+  def unitPairs(building: DataFrame, units: DataFrame, idUnit: String,
+                grid: CellGrid, res: Int): DataFrame =
+    SpatialJoin.intersectsJoin(building, "the_geom",
+      units.select(col(idUnit), col("the_geom").as("unit_geom")), "unit_geom", grid, res)
+
+  /** Ordered pairs of distinct intersecting buildings: the columns of
+    * `building` next to the same columns prefixed `nb_`. The one building
+    * self-join that [[roofAreaDistribution]] and
+    * [[projectedFacadeAreaDistribution]] share. */
+  def buildingNeighbours(building: DataFrame, grid: CellGrid, res: Int): DataFrame =
+    SpatialJoin.intersectsJoin(building, "the_geom",
+        building.select(building.columns.map(c => col(c).as(s"nb_$c")): _*), "nb_the_geom", grid, res)
+      .where(col("id_build") =!= col("nb_id_build"))
+
   /** SUM((1-contiguity)·facade_len·h_wall)/rsu_area, 0 for empty RSUs —
     * RsuIndicators.groovy:53-86 (golden rsu1 = 0.947 on buildings 1-7).
     * A [[GenericIndicators.perUnit]] family: reads the buildings'
@@ -27,22 +46,21 @@ object RsuIndicators {
   /**
    * Exact free external facade density — RsuIndicators.groovy:108-214
    * (freeExternalFacadeDensityExact; goldens 0.28/0.28/0.25/0.25/0 and
-   * 0.16/0.04): building boundaries clipped to their RSU (via the prebuilt
-   * building↔RSU correlation), shared facades detected with a 0.01 snap
-   * tolerance and subtracted (each shared wall counted once per side, like
-   * the reference's ordered-pair sum), divided by RSU area; RSUs with no
-   * buildings keep 0.
+   * 0.16/0.04): building boundaries clipped to their unit (the building ×
+   * unit `pairs` of [[unitPairs]], keyed by `idRsu`), shared facades
+   * detected with a 0.01 snap tolerance and subtracted (each shared wall
+   * counted once per side, like the reference's ordered-pair sum), divided
+   * by unit area; units of `rsu` with no buildings keep 0.
    */
-  def freeExternalFacadeDensityExact(buildingWithRsu: DataFrame, rsu: DataFrame,
+  def freeExternalFacadeDensityExact(pairs: DataFrame, rsu: DataFrame,
                                      idRsu: String = "id_rsu",
                                      grid: CellGrid = CellGrid.fixture,
                                      res: Int = 12): DataFrame = {
     val snapTol = 0.01
-    val buildLine = buildingWithRsu
-      .join(rsu.select(col(idRsu), col("the_geom").as("__rg")), Seq(idRsu), "left")
-      .select(col("id_build"), col(idRsu), G.stArea(col("__rg")).as("__rsu_area"),
-        when(G.stContains(col("__rg"), col("the_geom")), G.stToMultiLine(col("the_geom")))
-          .otherwise(G.stLines(G.stIntersection(G.stToMultiLine(col("the_geom")), col("__rg"))))
+    val buildLine = pairs
+      .select(col("id_build"), col(idRsu), G.stArea(col("unit_geom")).as("__rsu_area"),
+        when(G.stContains(col("unit_geom"), col("the_geom")), G.stToMultiLine(col("the_geom")))
+          .otherwise(G.stLines(G.stIntersection(G.stToMultiLine(col("the_geom")), col("unit_geom"))))
           .as("__lg"),
         col("height_wall"))
       .localCheckpoint() // reused by the shared-facade self-join
@@ -196,22 +214,19 @@ object RsuIndicators {
       .drop("__area")
   }
 
-  /** Exact roof fraction per height layer: buildings clipped to the RSU,
-    * roof area attributed to the layer containing height_roof —
+  /** Exact roof fraction per height layer: the roof area of each building
+    * piece in a unit attributed to the layer containing its height_roof —
     * RsuIndicators.groovy:1938-2063 (reference loops one SQL per layer; we
-    * fuse all layers into ONE aggregate pass, SURVEY §2.4). */
-  def roofFractionDistributionExact(rsu: DataFrame, building: DataFrame,
-                                    layerBounds: Seq[(Double, Double)],
-                                    grid: CellGrid, res: Int): DataFrame = {
-    val cand = SpatialJoin.intersectsJoin(
-      rsu.select(col("id_rsu"), col("the_geom")), "the_geom",
-      building.select(col("the_geom").as("bgeom"), col("height_roof")), "bgeom", grid, res)
-      .withColumn("__a", G.stIntersectionArea(col("the_geom"), col("bgeom")))
+    * fuse all layers into ONE aggregate pass, SURVEY §2.4). `pieces` holds
+    * one row per building piece: id_rsu, height_roof and its `area` (the
+    * intersection area of a [[unitPairs]] row, or a grid cut piece's area). */
+  def roofFractionDistributionExact(rsu: DataFrame, pieces: DataFrame,
+                                    layerBounds: Seq[(Double, Double)]): DataFrame = {
     val aggs = layerBounds.zipWithIndex.map { case ((lo, hi), i) =>
-      sum(when(col("height_roof") >= lo && col("height_roof") < hi, col("__a"))
+      sum(when(col("height_roof") >= lo && col("height_roof") < hi, col("area"))
         .otherwise(0.0)).as(s"__l_$i")
-    } :+ sum(col("__a")).as("__tot")
-    val g = cand.groupBy("id_rsu").agg(aggs.head, aggs.tail: _*)
+    } :+ sum(col("area")).as("__tot")
+    val g = pieces.groupBy("id_rsu").agg(aggs.head, aggs.tail: _*)
     val out = rsu.select("id_rsu").join(g, Seq("id_rsu"), "left")
     layerBounds.zipWithIndex.foldLeft(out) { case (df, ((lo, hi), i)) =>
       df.withColumn(
@@ -236,35 +251,36 @@ object RsuIndicators {
    *     layer; facades clipped to the RSU (contains fast path);
    *  5. exploded to segments; per direction bucket the projected length
    *     len·|sin(az−dirMid)|/2 (cos fold-back outside ±π/2).
-   * All steps are cell-equijoins + one hash aggregate — no correlated
-   * subqueries, no per-row SQL like the reference's temp-table chain.
+   * The party walls come from `neighbours` ([[buildingNeighbours]] of
+   * `building`). A facade lies on its own building, so it can only meet the
+   * units its building meets: the RSU clip is an equi-join on id_build
+   * against the building × RSU `pairs` ([[unitPairs]]), refined by the same
+   * ST_INTERSECTS. One hash aggregate — no correlated subqueries, no per-row
+   * SQL like the reference's temp-table chain.
    */
-  def projectedFacadeAreaDistribution(building: DataFrame, rsu: DataFrame,
-                                      grid: CellGrid, res: Int,
+  def projectedFacadeAreaDistribution(building: DataFrame, neighbours: DataFrame,
+                                      pairs: DataFrame, rsu: DataFrame,
                                       layersBottom: Seq[Double] = Seq(0, 10, 20, 30, 40, 50),
                                       numDirection: Int = 12): DataFrame = {
     require(360 % numDirection == 0 && numDirection % 2 == 0)
     val b = building.select(col("id_build"), col("the_geom"),
       col("height_wall").cast("double").as("height_wall"))
-    val bB = b.select(col("id_build").as("__idb"), col("the_geom").as("__gb"),
-      col("height_wall").as("__hwb"))
-    val party = SpatialJoin.intersectsJoin(b, "the_geom", bB, "__gb", grid, res)
-      .where(col("id_build") =!= col("__idb"))
-      .select(col("id_build").as("ida"), col("__idb").as("idb"),
-        G.stLines(G.stIntersection(G.stMakeValid(col("the_geom")), G.stMakeValid(col("__gb")))).as("pw"),
-        greatest(col("height_wall"), col("__hwb")).as("z_max"),
-        least(col("height_wall"), col("__hwb")).as("z_min"))
+    val hwa = col("height_wall").cast("double"); val hwb = col("nb_height_wall").cast("double")
+    val party = neighbours
+      .select(col("id_build").as("ida"), col("nb_id_build").as("idb"),
+        G.stLines(G.stIntersection(G.stMakeValid(col("the_geom")), G.stMakeValid(col("nb_the_geom")))).as("pw"),
+        greatest(hwa, hwb).as("z_max"), least(hwa, hwb).as("z_min"))
     val touched = party.select(col("ida")).distinct()
     val isolated = b.join(touched, b("id_build") === touched("ida"), "left_anti")
-      .select(G.stToMultiLine(col("the_geom")).as("fac"),
+      .select(col("id_build"), G.stToMultiLine(col("the_geom")).as("fac"),
         col("height_wall").as("z_max"), lit(0.0).as("z_min"))
     val unions = party.where(!G.stIsEmpty(col("pw")))
       .groupBy(col("ida")).agg(G.st_union_agg(col("pw")).as("__pu"))
     val freed = b.join(unions, b("id_build") === unions("ida"))
-      .select(G.stDifference(G.stToMultiLine(col("the_geom")), col("__pu")).as("fac"),
+      .select(col("id_build"), G.stDifference(G.stToMultiLine(col("the_geom")), col("__pu")).as("fac"),
         col("height_wall").as("z_max"), lit(0.0).as("z_min"))
     val partyFac = party.where(col("ida") < col("idb"))
-      .select(col("pw").as("fac"), col("z_max"), col("z_min"))
+      .select(col("ida").as("id_build"), col("pw").as("fac"), col("z_max"), col("z_min"))
     val facades = isolated.unionAll(freed).unionAll(partyFac)
 
     // vertical extent of each facade within each layer
@@ -278,14 +294,14 @@ object RsuIndicators {
         when(zmax <= l0, 0.0).otherwise(when(zmin >= l1, 0.0)
           .otherwise(lit(l1 - l0) - greatest(lit(l1) - zmax, lit(0.0)) - greatest(zmin - l0, lit(0.0))))
       } :+ when(zmax >= layersBottom.last, zmax - greatest(zmin, lit(layersBottom.last))).otherwise(0.0)
-    val layered = facades.select(col("fac") +:
+    val layered = facades.select(col("id_build") +: col("fac") +:
       layerNames.zip(layerExprs).map { case (n, c) => c.as(n) }: _*)
 
-    // clip facades to RSUs (prepared on the RSU side), explode to segments
-    val r = rsu.select(col("id_rsu"), col("the_geom").as("__rg"))
-    val clipped = SpatialJoin.intersectsJoin(layered, "fac", r, "__rg", grid, res)
-      .withColumn("__cf", when(G.stContains(col("__rg"), col("fac")), col("fac"))
-        .otherwise(G.stIntersection(col("__rg"), col("fac"))))
+    // clip facades to the RSUs their building meets, explode to segments
+    val clipped = layered.join(pairs.select("id_build", "id_rsu", "unit_geom"), "id_build")
+      .where(G.stIntersects(col("unit_geom"), col("fac")))
+      .withColumn("__cf", when(G.stContains(col("unit_geom"), col("fac")), col("fac"))
+        .otherwise(G.stIntersection(col("unit_geom"), col("fac"))))
     val segs = clipped.select(
       (col("id_rsu") +: layerNames.map(col)) :+ explode(G.stSegments(col("__cf"))).as("s"): _*)
       .withColumn("__az", radians(col("s._6")))
@@ -314,30 +330,33 @@ object RsuIndicators {
   /**
    * Frontal area index distribution — RsuIndicators.groovy:2092-2313
    * (goldens: rsu1 h0_5_d30_60 → 0.00566, h50_61_d30_60 → 0.00321):
-   * building boundaries clipped to their RSU (id-correlation), shared
-   * facades (snap 0.01) re-entered with NEGATIVE length and the MIN wall
-   * height (so the net is the exposed strip above the shorter neighbor),
-   * each segment projected onto every direction it FACES (raw azimuth,
-   * orientation preserved), split across height layers; the last layer's
-   * top is max(height_wall)+1 like the reference. One fused aggregate pass
-   * instead of the reference's per-layer temp tables.
+   * building boundaries clipped to their unit (the building × unit `pairs`
+   * of [[unitPairs]]), shared facades (snap 0.01) re-entered with NEGATIVE
+   * length and the MIN wall height (so the net is the exposed strip above
+   * the shorter neighbor), each segment projected onto every direction it
+   * FACES (raw azimuth, orientation preserved), split across height layers;
+   * the last layer's top is max(height_wall)+1 like the reference. One fused
+   * aggregate pass instead of the reference's per-layer temp tables.
    */
-  def frontalAreaIndexDistribution(buildingWithRsu: DataFrame, rsu: DataFrame,
+  def frontalAreaIndexDistribution(pairs: DataFrame, rsu: DataFrame,
+                                   grid: CellGrid, res: Int,
                                    layersBottom: Seq[Double] = Seq(0, 5, 10, 15, 20, 25, 30, 35, 40, 45, 50),
                                    numDirection: Int = 12): DataFrame = {
     require(360 % numDirection == 0 && numDirection % 2 == 0)
     val snapTol = 0.01
-    val buildLine = buildingWithRsu
-      .join(rsu.select(col("id_rsu"), col("the_geom").as("__rg")), Seq("id_rsu"), "left")
+    val buildLine = pairs
       .select(col("id_build"), col("id_rsu"),
-        when(G.stContains(col("__rg"), col("the_geom")), col("the_geom"))
-          .otherwise(G.stLines(G.stIntersection(G.stToMultiLine(col("the_geom")), col("__rg"))))
+        when(G.stContains(col("unit_geom"), col("the_geom")), col("the_geom"))
+          .otherwise(G.stLines(G.stIntersection(G.stToMultiLine(col("the_geom")), col("unit_geom"))))
           .as("__lg"),
         col("height_wall").cast("double").as("height_wall"))
       .localCheckpoint()
     val bAlias = buildLine.select(col("id_rsu"), col("id_build").as("__idb"),
       col("__lg").as("__lgb"), col("height_wall").as("__hwb"))
-    val shared = buildLine.join(bAlias, Seq("id_rsu"))
+    // same-unit pairs prefiltered by padded envelopes, as in
+    // freeExternalFacadeDensityExact (output-equivalent to all pairs)
+    val shared = SpatialJoin.candidates(buildLine, "__lg", bAlias, "__lgb", grid, res,
+        pad = snapTol, keys = Seq("id_rsu"))
       .where(col("id_build") =!= col("__idb"))
       .withColumn("__snapped", G.stSnap(col("__lgb"), col("__lg"), lit(snapTol)))
       .where(G.stIntersects(col("__lg"), col("__snapped")))
@@ -352,7 +371,7 @@ object RsuIndicators {
       .select(col("id_rsu"), col("s._1").as("len"), col("s._2").as("az"), col("hw"))
     val lines = shared.unionAll(own).localCheckpoint()
 
-    val maxH = buildingWithRsu.agg(max(col("height_wall"))).head() match {
+    val maxH = pairs.agg(max(col("height_wall"))).head() match {
       case r if r.isNullAt(0) => 1.0
       case r => r.getAs[Any](0).toString.toDouble.toInt + 1.0
     }
@@ -406,9 +425,13 @@ object RsuIndicators {
    * with the reference's swapped output names replicated verbatim
    * (optionalNonVert is aliased VERT_ROOF_DENSITY in the reference SQL).
    * Building table needs id_build, id_rsu, the_geom, height_wall, height_roof.
+   * Taller neighbours come from `neighbours` ([[buildingNeighbours]] of the
+   * buildings with their heights). The clip reads the row of each
+   * building's own id_rsu among the building × RSU `pairs` ([[unitPairs]]):
+   * a max-overlap RSU intersects its building, so that row is there.
    */
-  def roofAreaDistribution(rsu: DataFrame, building: DataFrame,
-                           layersBottom: Seq[Double], grid: CellGrid, res: Int,
+  def roofAreaDistribution(rsu: DataFrame, building: DataFrame, pairs: DataFrame,
+                           neighbours: DataFrame, layersBottom: Seq[Double],
                            density: Boolean = true): DataFrame = {
     val ini = building.select(col("id_build"), col("id_rsu"), col("the_geom"),
       col("height_roof").cast("double").as("z_max"),
@@ -421,24 +444,21 @@ object RsuIndicators {
       .withColumn("vert", pow(col("building_area"), 0.5) * col("delta_h"))
 
     // vertical roof in contact with a taller neighbor's facade
-    val aSide = ini.select(col("id_build").as("__ida"), col("the_geom").as("__ga"),
-      col("building_area").as("__area_a"), col("z_min").as("__zmin_a"))
-    val bSide = ini.select(col("id_build").as("__idb"), col("the_geom").as("__gb"),
-      col("building_area").as("__area_b"), col("z_max").as("__zmax_b"),
-      col("delta_h").as("__dh_b"))
-    val toRemove = SpatialJoin.intersectsJoin(aSide, "__ga", bSide, "__gb", grid, res)
-      .where(col("__ida") =!= col("__idb") && col("__zmin_a") >= col("__zmax_b"))
-      .groupBy(col("__idb").as("id_build"))
-      .agg(sum(when(col("__area_b") > col("__area_a"), pow(col("__area_a"), 0.5))
-        .otherwise(pow(col("__area_b"), 0.5)) * col("__dh_b") / 2.0).as("__rm"))
+    val areaA = G.stArea(col("the_geom")); val areaB = G.stArea(col("nb_the_geom"))
+    val toRemove = neighbours
+      .where(col("height_wall").cast("double") >= col("nb_height_roof").cast("double"))
+      .groupBy(col("nb_id_build").as("id_build"))
+      .agg(sum(when(areaB > areaA, pow(areaA, 0.5)).otherwise(pow(areaB, 0.5))
+        * (col("nb_height_roof").cast("double") - col("nb_height_wall").cast("double"))
+        / 2.0).as("__rm"))
 
     val clipped = ini.join(toRemove, Seq("id_build"), "left")
-      .join(rsu.select(col("id_rsu"), col("the_geom").as("__rg")), "id_rsu")
+      .join(pairs.select("id_build", "id_rsu", "unit_geom"), Seq("id_build", "id_rsu"))
       .withColumn("nv", col("non_vert")
-        * G.stIntersectionArea(col("__rg"), col("the_geom")) / col("building_area"))
+        * G.stIntersectionArea(col("unit_geom"), col("the_geom")) / col("building_area"))
       .withColumn("vv", (col("vert") - coalesce(col("__rm"), lit(0.0)))
         * (lit(1.0) - lit(0.5) * (lit(1.0)
-          - G.stIntersectionLength(col("__rg"), G.stToMultiLine(col("the_geom"))) / col("facade_len"))))
+          - G.stIntersectionLength(col("unit_geom"), G.stToMultiLine(col("the_geom"))) / col("facade_len"))))
 
     val zmax = col("z_max"); val zmin = col("z_min"); val dh = col("delta_h")
     val L = layersBottom.last
@@ -534,7 +554,9 @@ object RsuIndicators {
    * parallelize across the cluster, candidates come from the cell-equijoin.
    *
    * @param layers (name, DataFrame with the_geom) in a fixed order; flags
-   *               come out as one Int column per layer name.
+   *               come out as one Int column per layer name. A layer given
+   *               as its [[unitPairs]] with the RSUs (it carries
+   *               `unit_geom`) is clipped from its pairs, not joined again.
    * @return id_rsu, area, <layer flag columns>
    */
   def smallestCommonGeometry(rsu: DataFrame, layers: Seq[(String, DataFrame)],
@@ -548,11 +570,14 @@ object RsuIndicators {
     val layerNames = layers.map(_._1)
     val r = rsu.select(col("id_rsu"), col("the_geom"))
     val clipped = layers.map { case (name, df) =>
-      SpatialJoin.candidates(r, "the_geom",
-          df.select(col("the_geom").as("__lg")), "__lg", grid, res)
-        .where(G.stIntersects(col("the_geom"), col("__lg")))
-        .select(col("id_rsu"), lit(name).as("__layer"),
-          G.stIntersection(col("the_geom"), col("__lg")).as("__clip"))
+      val pairs =
+        if (df.columns.contains("unit_geom")) // already paired with the units
+          df.select(col("id_rsu"), col("unit_geom").as("the_geom"), col("the_geom").as("__lg"))
+        else SpatialJoin.candidates(r, "the_geom",
+            df.select(col("the_geom").as("__lg")), "__lg", grid, res)
+          .where(G.stIntersects(col("the_geom"), col("__lg")))
+      pairs.select(col("id_rsu"), lit(name).as("__layer"),
+        G.stIntersection(col("the_geom"), col("__lg")).as("__clip"))
     }.reduce(_ unionAll _)
 
     val names = layerNames // stable closure copy

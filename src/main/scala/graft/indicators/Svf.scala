@@ -111,14 +111,15 @@ object Svf {
   }
 
   /**
-   * The full groundSkyViewFactor chain. `rsu(id_rsu, the_geom)`,
-   * `building(the_geom, height_wall)` (already related to the RSU or not —
+   * The full groundSkyViewFactor chain. `rsu(id_rsu, the_geom)`, `pairs` =
+   * the buildings × RSU relation ([[RsuIndicators.unitPairs]]), `building(
+   * the_geom, height_wall)` the walls (related to the RSU or not —
    * obstruction search is purely spatial, as in the reference's ST_DWITHIN).
    * Returns (id_rsu, ground_sky_view_factor); RSUs whose every sample point
    * has NO wall within rayLength average only over points that do (reference
    * inner-join semantics), and RSUs with no scored points get 1.0.
    */
-  def groundSkyViewFactor(rsu: DataFrame, building: DataFrame,
+  def groundSkyViewFactor(rsu: DataFrame, pairs: DataFrame, building: DataFrame,
                           grid: CellGrid, res: Int,
                           pointDensity: Double = 0.008, rayLength: Double = 100.0,
                           numberOfDirection: Int = 60,
@@ -126,11 +127,8 @@ object Svf {
     val dirs = directions(numberOfDirection)
 
     // 1. building-free ground per RSU (rsuDiff/rsuDiffTot)
-    val b = building.select(col("the_geom").as("__bgeom"), col("height_wall"))
-    val withB = SpatialJoin.intersectsJoin(
-        rsu.select(col("id_rsu"), col("the_geom")), "the_geom", b, "__bgeom", grid, res)
-      .groupBy("id_rsu")
-      .agg(first(col("the_geom")).as("__rg"), G.st_union_agg(col("__bgeom")).as("__bu"))
+    val withB = pairs.groupBy("id_rsu")
+      .agg(first(col("unit_geom")).as("__rg"), G.st_union_agg(col("the_geom")).as("__bu"))
       .select(col("id_rsu"), {
         val diff = G.stDifference(col("__rg"), G.stMakeValid(col("__bu")))
         when(G.stIsEmpty(diff), G.stExteriorRing(G.stNormalize(col("__rg"))))
@@ -139,6 +137,8 @@ object Svf {
     val freeTot = rsu.join(withB, Seq("id_rsu"), "left")
       .select(col("id_rsu"), coalesce(col("__free"), col("the_geom")).as("__free"))
       .localCheckpoint() // feeds both the polygon and the line point branches
+
+    val b = building.select(col("the_geom").as("__bgeom"), col("height_wall"))
 
     // 2. sample points (deterministic Halton; reference: random
     //    ST_GENERATEPOINTS — see scaladoc)

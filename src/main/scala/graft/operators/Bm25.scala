@@ -61,11 +61,4 @@ object Bm25 {
       .agg(count(lit(1)).as("n_terms_hit"), first(col("__dl")).as("doc_len"),
         sum(col("__s")).as("score"))
   }
-
-  /** Top-k by score (ties broken by ascending id — deterministic). */
-  def topK(docs: DataFrame, idCol: String, textCol: String,
-           queryTerms: Seq[String], k: Int,
-           k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    score(docs, idCol, textCol, queryTerms, k1, b)
-      .orderBy(col("score").desc, col(idCol)).limit(k)
 }

@@ -189,14 +189,4 @@ object TextAnalysis {
         coalesce(col("__dupTriChars").cast("double"), lit(0.0)) / col("__nc"))
         .otherwise(0.0).as("dup_trigram_frac"))
   }
-
-  /** One-pass text-stats projection for the documents table. */
-  def analyze(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol),
-      tokenCount(col(textCol)).as("n_tokens"),
-      subwordCount(col(textCol)).as("n_subwords"),
-      length(col(textCol)).cast("long").as("n_chars"),
-      langId(col(textCol)).as("lang_id"),
-      qualityScore(col(textCol)).as("quality"),
-      fingerprint(col(textCol)).as("fingerprint"))
 }

@@ -32,12 +32,6 @@ object UrlOps {
   /** Tracking query params stripped by [[canonicalize]] (`k=v` regex). */
   val TrackingParamPattern = "^(utm_[A-Za-z0-9_]+|fbclid|gclid|ref)="
 
-  /** Host of a URL, lowercased, `www.`-stripped, port removed. */
-  def hostOf(url: Column): Column =
-    regexp_replace(regexp_replace(
-      lower(regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#:]*)", 1)),
-      "^www\\.", ""), ":.*$", "")
-
   def canonicalize(url: Column): Column = {
     val scheme = lower(regexp_extract(url, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
     val hostPort = lower(regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1))

@@ -110,21 +110,6 @@ object BdTopo {
         col("type"), col("main_use"), col("zindex"), col("estimated"))
   }
 
-  /** Commune-zone clip for line layers (BDTopoV2Workflow queryMapper:
-    * `&& + ST_INTERSECTS` keep, contained kept verbatim, the rest clipped
-    * with the line components of the intersection — ST_CollectionExtract
-    * (..., 2)). `zone` is the one-row commune polygon (COMMUNE.shp). */
-  def clipLinesToZone(raw: DataFrame, zone: DataFrame): DataFrame = {
-    val z = broadcast(zone.select(col("the_geom").as("__zg")))
-    raw.crossJoin(z)
-      .where(G.stIntersects(col("__zg"), col("the_geom")))
-      .withColumn("the_geom",
-        when(G.stContains(col("__zg"), col("the_geom")), col("the_geom"))
-          .otherwise(G.stLines(G.stIntersection(col("the_geom"), col("__zg")))))
-      .where(!G.stIsEmpty(col("the_geom")))
-      .drop("__zg")
-  }
-
   // ---- roads --------------------------------------------------------------
 
   /** NATURE → (type, maxspeed, surface) — formatRoadLayer's switch

@@ -146,7 +146,9 @@ object WorkflowChain {
    * RSU-scale indicator table. `bu` = the building-indicator table (with
    * its `area`) WITH id_rsu attached; `rsu` = (id_rsu, the_geom). All
    * blocks gated by `indicatorUse` exactly like the reference. Every
-   * building → RSU family aggregates `bu` in ONE checkpointed pass by id_rsu.
+   * building → RSU family aggregates `bu` in ONE checkpointed pass by id_rsu;
+   * every spatial family reads the building × RSU pairs, built and
+   * checkpointed once here.
    */
   def computeRsuIndicators(bu: DataFrame, rsu0: DataFrame,
                            road: Option[DataFrame], vegetation: Option[DataFrame],
@@ -162,6 +164,9 @@ object WorkflowChain {
     val utrf = uses.contains("UTRF"); val lcz = uses.contains("LCZ")
     val teb = uses.contains("TEB")
     val rsu = rsu0.select("id_rsu", "the_geom").localCheckpoint()
+    val buGeom = bu.select("id_build", "the_geom", "height_wall", "height_roof")
+    val pairs = RsuIndicators.unitPairs(buGeom, rsu, "id_rsu", grid, res).localCheckpoint()
+    lazy val neighbours = RsuIndicators.buildingNeighbours(buGeom, grid, res).localCheckpoint()
 
     // -- building families, one aggregate over bu ---------------------------
     // type fractions (LCZ, TEB), free external facade density (LCZ || UTRF),
@@ -202,10 +207,10 @@ object WorkflowChain {
     def veg(cls: String) = vegetation.map(v =>
       if (v.columns.contains("height_class")) v.where(col("height_class") === cls) else v)
     val fractionLayers = Seq(
-      "water" -> water, "building" -> Some(bu),
+      "water" -> water, "building" -> Some(pairs),
       "high_vegetation" -> veg("high"), "low_vegetation" -> veg("low"),
       "rail" -> rail, "impervious" -> impervious)
-      .collect { case (n, Some(df)) => n -> df.select(col("the_geom")) }
+      .collect { case (n, Some(df)) => n -> df }
     val priorities = WorkflowRunner.DefaultPriorities.filter(fractionLayers.map(_._1).contains)
     val superpos = WorkflowRunner.DefaultSuperpositions
       .map { case (k, vs) => k -> vs.filter(fractionLayers.map(_._1).contains) }
@@ -236,7 +241,8 @@ object WorkflowChain {
       val bounds = Seq(0.0, 5.0, 10.0, 15.0, 20.0, 25.0, 30.0, 35.0, 40.0, 45.0, 50.0)
         .sliding(2).collect { case Seq(a, b) => (a, b) }.toSeq
       out = out.join(RsuIndicators.roofFractionDistributionExact(rsu,
-        bu.select("the_geom", "height_roof"), bounds, grid, res), Seq("id_rsu"), "left")
+        pairs.withColumn("area", G.stIntersectionArea(col("unit_geom"), col("the_geom"))), bounds),
+        Seq("id_rsu"), "left")
     }
 
     // -- road operations (UTRF || TEB) --------------------------------------
@@ -251,14 +257,14 @@ object WorkflowChain {
     // -- roof area distribution (TEB) ---------------------------------------
     if (teb)
       out = out.join(RsuIndicators.roofAreaDistribution(rsu,
-        bu.select("id_build", "id_rsu", "the_geom", "height_wall", "height_roof"),
-        facadeDensListLayersBottom, grid, res), Seq("id_rsu"), "left")
+        bu.select("id_build", "id_rsu", "the_geom", "height_wall", "height_roof"), pairs, neighbours,
+        facadeDensListLayersBottom), Seq("id_rsu"), "left")
 
     // -- projected facade area distribution (LCZ || TEB) --------------------
     val projDist: Option[DataFrame] =
       if (lcz || teb)
         Some(RsuIndicators.projectedFacadeAreaDistribution(
-          bu.select("id_build", "the_geom", "height_wall"), rsu, grid, res,
+          buGeom, neighbours, pairs, rsu,
           facadeDensListLayersBottom, facadeDensNumberOfDirection).localCheckpoint())
       else None
     projDist.foreach(p => out = out.join(p, Seq("id_rsu"), "left"))
@@ -279,7 +285,7 @@ object WorkflowChain {
             rsu, 10.0, grid, res)
             .select(col("id_rsu"),
               (lit(1.0) - col("extended_free_facade_fraction")).as("ground_sky_view_factor"))
-        else Svf.groundSkyViewFactor(rsu, bu.select("the_geom", "height_wall"), grid, res)
+        else Svf.groundSkyViewFactor(rsu, pairs, bu.select("the_geom", "height_wall"), grid, res)
       out = out.join(svf, Seq("id_rsu"), "left")
     }
 

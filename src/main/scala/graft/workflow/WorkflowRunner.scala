@@ -173,27 +173,6 @@ object WorkflowRunner {
       "fire_station", "water_tower", "grandstand", "transportation", "toll_booth", "hut",
       "shed", "garage", "service", "storage_tank", "slurry_tank"))
 
-  /** cutBuilding (WorkflowGeoIndicators.groovy:2290-2320): clip every
-    * building to each grid cell it intersects; keeps the full-geometry fast
-    * path for contained buildings, adds the cut `area` and the reference's
-    * `build_height` = (height_wall + height_roof)/2. One cell-equijoin +
-    * map-side intersection — no driver state. */
-  def cutBuilding(cells: DataFrame, building: DataFrame,
-                  grid: CellGrid, res: Int): DataFrame = {
-    import graft.geom.{GeoFunctions => G}
-    SpatialJoin.candidates(cells.select(col("id_grid"), col("the_geom").as("__cg")), "__cg",
-        building.withColumnRenamed("the_geom", "__bg"), "__bg", grid, res,
-        broadcastB = false)
-      .where(G.stIntersects(col("__cg"), col("__bg")))
-      .withColumn("the_geom",
-        when(G.stContains(col("__cg"), col("__bg")), col("__bg"))
-          .otherwise(G.stCollectionExtractPolygons(G.stIntersection(col("__cg"), col("__bg")))))
-      .where(!G.stIsEmpty(col("the_geom")))
-      .withColumn("area", G.stArea(col("the_geom")))
-      .withColumn("build_height", (col("height_wall") + col("height_roof")) / 2)
-      .drop("__cg", "__bg")
-  }
-
   private def ren(df: DataFrame, from: String, to: String): DataFrame =
     df.withColumnRenamed(from, to)
 
@@ -248,6 +227,13 @@ object WorkflowRunner {
     import graft.geom.{GeoFunctions => G}
     import graft.indicators.{GridIndicators, RsuIndicators}
     val cells = cells0.localCheckpoint() // joined against many times
+    // building × cell pairs (the reference's all-intersections relation),
+    // read by every building family below; ids + attrs + both geometries
+    val cellGeoms = cells.select("id_grid", "the_geom")
+    lazy val pairs = RsuIndicators.unitPairs(layers.building, cellGeoms, "id_grid", grid, res)
+      .localCheckpoint()
+    def pairsAsRsu = pairs.select(col("id_build"), col("id_grid").as("id_rsu"), col("the_geom"),
+      col("unit_geom"), col("height_wall"))
     val inds = inds0.map(_.trim.toUpperCase)
     val warmSizes = inds.collect {
       case s if s.startsWith("COUNT_WARM_") => s.stripPrefix("COUNT_WARM_").toInt
@@ -307,18 +293,17 @@ object WorkflowRunner {
     val needsFractions = inds.exists(Set("LAND_TYPE_FRACTION",
       "BUILDING_SURFACE_DENSITY", "ASPECT_RATIO",
       "FREE_EXTERNAL_FACADE_DENSITY", "STREET_WIDTH"))
-    val fractionLayers: Seq[(String, DataFrame)] = {
+    lazy val fractionLayers: Seq[(String, DataFrame)] = {
       def veg(cls: String) = layers.vegetation.map(v =>
         if (v.columns.contains("height_class")) v.where(col("height_class") === cls) else v)
       Seq("water" -> layers.water,
-        "building" -> Some(layers.building),
+        "building" -> Some(pairsAsRsu),
         "high_vegetation" -> veg("high"),
         "low_vegetation" -> veg("low"),
         "rail" -> layers.rail,
         "road" -> None, // line layer: no interior to flag in the overlay
         "impervious" -> layers.impervious)
-        .collect { case (n, Some(df)) if priorities.contains(n) =>
-          n -> df.select(col("the_geom")) }
+        .collect { case (n, Some(df)) if priorities.contains(n) => n -> df }
     }
     val fractions: Option[DataFrame] =
       if (needsFractions && fractionLayers.nonEmpty) {
@@ -341,16 +326,9 @@ object WorkflowRunner {
     if (inds.contains("BUILDING_HEIGHT")) { needUnweighted += OpAvg; needUnweighted += OpStd }
     if (inds.exists(Set("HEIGHT_OF_ROUGHNESS_ELEMENTS", "TERRAIN_ROUGHNESS")))
       needUnweighted += OpGeomAvg
-    // building↔cell relation reused by several blocks; ids + attrs only
-    lazy val rel = SpatialJoin.intersectsJoin(
-        layers.building.withColumnRenamed("the_geom", "__bg"), "__bg",
-        cells.select(col("id_grid"), col("the_geom").as("__cg")), "__cg", grid, res)
-      .drop("__cg").withColumnRenamed("__bg", "the_geom")
-      .localCheckpoint()
-    val cellGeoms = cells.select("id_grid", "the_geom")
     val buildingStats: Option[DataFrame] =
       if (needUnweighted.nonEmpty) {
-        Some(perUnit(rel, cellGeoms, "id_grid")(unweightedOperationFromLowerScale("id_build",
+        Some(perUnit(pairs, cellGeoms, "id_grid")(unweightedOperationFromLowerScale("id_build",
           Map("height_roof" -> needUnweighted.toSeq))).drop("the_geom").localCheckpoint())
       } else None
     buildingStats.foreach(join)
@@ -365,7 +343,15 @@ object WorkflowRunner {
       (inds.contains("BUILDING_TYPE_FRACTION") && layers.building.columns.contains("type")) ->
         typeProportion("type", typeComposition, floorTypeComposition))
       .collect { case (true, f) => f }
-    lazy val cut = cutBuilding(cellGeoms, layers.building, grid, res).localCheckpoint()
+    // cutBuilding (:2290-2320): the pairs with a non-empty polygonal clip,
+    // contained buildings kept whole, plus the piece `area`
+    lazy val cut = pairs
+      .withColumn("the_geom",
+        when(G.stContains(col("unit_geom"), col("the_geom")), col("the_geom"))
+          .otherwise(G.stCollectionExtractPolygons(G.stIntersection(col("unit_geom"), col("the_geom")))))
+      .where(!G.stIsEmpty(col("the_geom")))
+      .withColumn("area", G.stArea(col("the_geom")))
+      .localCheckpoint()
     // checkpointed when the weighted stats also feed STREET_WIDTH
     val perCell: Option[DataFrame] = if (cutFamilies.isEmpty) None else Some {
       val agg = perUnit(if (cut.columns.contains("nb_lev")) cut else cut.withColumn("nb_lev", lit(1)),
@@ -393,9 +379,8 @@ object WorkflowRunner {
     // ---- exact facade density + aspect ratio + street width + BSD ---------
     if (inds.exists(Set("FREE_EXTERNAL_FACADE_DENSITY", "ASPECT_RATIO",
         "BUILDING_SURFACE_DENSITY", "STREET_WIDTH"))) {
-      val fefd = RsuIndicators.freeExternalFacadeDensityExact(
-        rel.select("id_build", "id_grid", "the_geom", "height_wall"),
-        cells.select("id_grid", "the_geom"), "id_grid", grid, res).localCheckpoint()
+      val fefd = RsuIndicators.freeExternalFacadeDensityExact(pairs, cells.select("id_grid"),
+        "id_grid", grid, res).localCheckpoint()
       if (inds.exists(Set("FREE_EXTERNAL_FACADE_DENSITY", "ASPECT_RATIO", "STREET_WIDTH")))
         join(fefd)
       // total building fraction (building + superposed building) — :2049-2060
@@ -430,22 +415,20 @@ object WorkflowRunner {
       }
     }
 
-    // ---- roof height distribution on cut buildings (:2088-2098) -----------
+    // ---- roof height distribution on cut buildings (:2088-2098): each cut
+    // piece lies in its own cell and only touches its neighbours, so its
+    // `area` is its roof area there ----------------------------------------
     if (inds.contains("BUILDING_HEIGHT_DISTRIBUTION")) {
       val bounds = Seq(0.0, 5.0, 10.0, 15.0, 20.0, 25.0, 30.0, 35.0, 40.0, 45.0, 50.0)
         .sliding(2).collect { case Seq(a, b) => (a, b) }.toSeq
-      join(ren(RsuIndicators.roofFractionDistributionExact(
-        ren(cells.select("id_grid", "the_geom"), "id_grid", "id_rsu"),
-        cut.select("the_geom", "height_roof"), bounds, grid, res),
-        "id_rsu", "id_grid"))
+      join(ren(RsuIndicators.roofFractionDistributionExact(ren(cells.select("id_grid"), "id_grid", "id_rsu"),
+        cut.select(col("id_grid").as("id_rsu"), col("height_roof"), col("area")), bounds), "id_rsu", "id_grid"))
     }
 
     // ---- frontal area index distribution (:2100-2112) ---------------------
     if (inds.contains("FRONTAL_AREA_INDEX"))
-      join(ren(RsuIndicators.frontalAreaIndexDistribution(
-        ren(rel.select("id_build", "id_grid", "the_geom", "height_wall"),
-          "id_grid", "id_rsu"),
-        ren(cells.select("id_grid", "the_geom"), "id_grid", "id_rsu"),
+      join(ren(RsuIndicators.frontalAreaIndexDistribution(pairsAsRsu,
+        ren(cellGeoms, "id_grid", "id_rsu"), grid, res,
         Seq(0, 5, 10, 15, 20, 25, 30, 35, 40, 45, 50), 12), "id_rsu", "id_grid"))
 
     // ---- sea/land fractions (:2114-2160) ----------------------------------
@@ -472,7 +455,7 @@ object WorkflowRunner {
     // ---- exact SVF (:2148-2160) -------------------------------------------
     if (inds.contains("SVF"))
       join(ren(graft.indicators.Svf.groundSkyViewFactor(
-        ren(cells.select("id_grid", "the_geom"), "id_grid", "id_rsu"),
+        ren(cellGeoms, "id_grid", "id_rsu"), pairsAsRsu,
         layers.building.select("the_geom", "height_wall"), grid, res),
         "id_rsu", "id_grid")
         .withColumnRenamed("ground_sky_view_factor", "svf"))
@@ -481,11 +464,9 @@ object WorkflowRunner {
     if (inds.exists(Set("TERRAIN_ROUGHNESS", "PROJECTED_FACADE_DENSITY_DIR"))) {
       val bottoms = Seq(0.0, 10.0, 20.0, 30.0, 40.0, 50.0)
       val nDir = 12
-      val fai = ren(RsuIndicators.frontalAreaIndexDistribution(
-        ren(rel.select("id_build", "id_grid", "the_geom", "height_wall"),
-          "id_grid", "id_rsu"),
-        ren(cells.select("id_grid", "the_geom"), "id_grid", "id_rsu"),
-        bottoms, nDir), "id_rsu", "id_grid").localCheckpoint()
+      val fai = ren(RsuIndicators.frontalAreaIndexDistribution(pairsAsRsu,
+        ren(cellGeoms, "id_grid", "id_rsu"), grid, res, bottoms, nDir), "id_rsu", "id_grid")
+        .localCheckpoint()
       val faiCols = fai.columns.filter(_.startsWith("frontal_area_index_")).toSeq
       if (inds.contains("PROJECTED_FACADE_DENSITY_DIR")) {
         // FAI columns are already per-cell-area indices: the per-direction

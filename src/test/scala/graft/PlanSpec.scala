@@ -53,6 +53,13 @@ class PlanSpec extends SparkTestBase {
     assert(readSchemas.forall(s => !s.contains("lang") && !s.contains("source")), readSchemas.mkString("\n"))
   }
 
+  test("osm_format_heights compiles under whole-stage codegen: no interpreted fallback") {
+    // with the fallback off, a generated class that fails to compile throws
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try assert(SparkEntry.queries("osm_format_heights")(spark, dir).collect().nonEmpty)
+    finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
   test("hot paths run inside whole-stage codegen") {
     // codegen stages print as "*(n)" in the finalized AQE plan
     assert(plan("geo_tile_assign").contains("*("))

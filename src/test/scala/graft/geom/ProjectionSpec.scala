@@ -3,8 +3,7 @@ package graft.geom
 import org.scalatest.funsuite.AnyFunSuite
 
 /** UTM (Karney-Krüger 6th-order) invariants: published quarter meridian,
-  * central-meridian anchors, scale factor k0, and forward/inverse
-  * round-trips at sub-micrometre accuracy. */
+  * central-meridian anchors and scale factor k0. */
 class ProjectionSpec extends AnyFunSuite {
 
   test("rectifying radius reproduces the published WGS84 quarter meridian") {
@@ -23,19 +22,6 @@ class ProjectionSpec extends AnyFunSuite {
     val m45 = 6378137.0 * (1 - e2) / math.pow(1 - e2 * math.pow(math.sin(math.toRadians(45)), 2), 1.5)
     val dN = (nB - nA) / math.toRadians(1e-5)
     assert(math.abs(dN / m45 - 0.9996) < 1e-6)
-  }
-
-  test("forward/inverse round-trip over the zone") {
-    val rnd = new scala.util.Random(7)
-    (1 to 200).foreach { _ =>
-      val lon = 0.5 + rnd.nextDouble() * 5.0   // zone 31: [0, 6]
-      val lat = -80 + rnd.nextDouble() * 160.0
-      val north = lat >= 0
-      val (e, n) = Projection.utmForward(lon, lat, 31, north)
-      val (lon2, lat2) = Projection.utmInverse(e, n, 31, north)
-      assert(math.abs(lon2 - lon) < 1e-9, s"lon $lon lat $lat")
-      assert(math.abs(lat2 - lat) < 1e-9, s"lon $lon lat $lat")
-    }
   }
 
   test("utmZone picks the standard zone") {

@@ -47,15 +47,4 @@ class CellGridProps extends AnyFunSuite {
       grid.cover(g, res).toSet.contains(grid.cell(x + fx * w, y + fy * h, res))
     })
   }
-
-  test("kRing membership is exactly Chebyshev distance <= k") {
-    check(Prop.forAll(coordGen, coordGen, Gen.choose(3, 12), Gen.choose(0, 4)) { (x, y, res, k) =>
-      val id = grid.cell(x, y, res)
-      val ring = grid.kRing(id, k)
-      val ix = grid.ixOf(id); val iy = grid.iyOf(id)
-      ring.forall { r =>
-        math.max(math.abs(grid.ixOf(r) - ix), math.abs(grid.iyOf(r) - iy)) <= k
-      } && ring.contains(id) && ring.toSet.size == ring.length
-    })
-  }
 }

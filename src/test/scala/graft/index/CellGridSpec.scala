@@ -33,7 +33,6 @@ class CellGridSpec extends AnyFunSuite {
     props(500) { r =>
       val x = coord(r); val y = coord(r); val res = 1 + r.nextInt(20)
       assert(g.parent(g.cell(x, y, res)) == g.cell(x, y, res - 1))
-      assert(g.ancestorAt(g.cell(x, y, res), res - 1) == g.cell(x, y, res - 1))
     }
   }
 
@@ -77,20 +76,6 @@ class CellGridSpec extends AnyFunSuite {
   test("compact cover is smaller than fixed cover for large polygons") {
     val poly = Geo.fromWkt("POLYGON((0 0, 2000 0, 2000 2000, 0 2000, 0 0))")
     assert(g.compactCover(poly, 14).length < g.cover(poly, 14).length)
-  }
-
-  test("kRing sizes and membership") {
-    val id = g.cell(100, 100, 12)
-    assert(g.kRing(id, 0).toSeq == Seq(id))
-    assert(g.kRing(id, 1).length == 9)
-    assert(g.kRing(id, 2).length == 25)
-    assert(g.kRing(id, 1).contains(id))
-  }
-
-  test("cellsInRadius includes own cell and cells within radius") {
-    val cells = g.cellsInRadius(10, 10, 25, 12)
-    assert(cells.contains(g.cell(10, 10, 12)))
-    assert(cells.contains(g.cell(30, 10, 12)))
   }
 
   test("ids at different resolutions never collide") {

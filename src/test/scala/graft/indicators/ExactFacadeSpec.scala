@@ -4,11 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.geom.{GeoFunctions => G}
 import graft.index.CellGrid
-import graft.operators.SpatialJoin
 
 /** freeExternalFacadeDensityExact vs the reference's goldens
   * (RsuIndicatorsTests.groovy:77-133). The building↔RSU correlation is the
-  * all-intersecting-pairs spatial join, like the reference's spatialJoin. */
+  * all-intersecting-pairs relation, like the reference's spatialJoin. */
 class ExactFacadeSpec extends SparkTestBase {
   import spark.implicits._
   private val grid = CellGrid.fixture
@@ -18,11 +17,7 @@ class ExactFacadeSpec extends SparkTestBase {
       .withColumn("the_geom", G.stGeomFromWkt($"wkt")).drop("wkt")
     val r = rsus.toDF("id_rsu", "wkt")
       .withColumn("the_geom", G.stGeomFromWkt($"wkt")).drop("wkt")
-    val corr = SpatialJoin.intersectsJoin(
-      b, "the_geom",
-      r.select($"id_rsu", $"the_geom".as("__rgeom")), "__rgeom", grid, 8)
-      .select("id_build", "id_rsu", "the_geom", "height_wall")
-    RsuIndicators.freeExternalFacadeDensityExact(corr, r)
+    RsuIndicators.freeExternalFacadeDensityExact(RsuIndicators.unitPairs(b, r, "id_rsu", grid, 8), r)
       .collect().map(x => x.getInt(0) -> x.getDouble(1)).toMap
   }
 

@@ -1,6 +1,6 @@
 package graft.indicators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -214,17 +214,8 @@ class PerUnitSpec extends SparkTestBase {
   /** Every column of `ref` is in `got`, row for row by `id`: doubles within
     * 1e-9, everything else exact. */
   private def assertSame(got: DataFrame, ref: DataFrame, id: String): Unit = {
-    val cols = ref.columns.filter(c => c != id && c != "the_geom").toSeq
-    assert(cols.forall(got.columns.contains), s"missing ${cols.filterNot(got.columns.contains)}")
-    def rows(df: DataFrame): Map[Any, Row] =
-      df.select(col(id) +: cols.map(col): _*).collect().map(r => r.get(0) -> r).toMap
-    val (g, e) = (rows(got), rows(ref))
-    assert(g.keySet == e.keySet)
-    for ((k, er) <- e; (c, i) <- cols.zipWithIndex) (g(k).get(i + 1), er.get(i + 1)) match {
-      case (x: Double, y: Double) =>
-        assert(x == y || math.abs(x - y) <= 1e-9 || (x.isNaN && y.isNaN), s"$id=$k $c: $x vs $y")
-      case (x, y) => assert(x == y, s"$id=$k $c: $x vs $y")
-    }
+    val bad = OverlayReference.mismatches(got, ref, id)
+    assert(bad.isEmpty, bad.take(10).mkString("\n"))
   }
 
   // ---- the scales -----------------------------------------------------------
@@ -280,7 +271,7 @@ class PerUnitSpec extends SparkTestBase {
     val got = WorkflowRunner.rasterizeIndicators(
       WorkflowRunner.Layers(zone = rsus, building = buildings), cells, inds, grid, Res)
     val cellGeoms = cells.select("id_grid", "the_geom"); val ids = cells.select("id_grid")
-    val cut = WorkflowRunner.cutBuilding(cellGeoms, buildings, grid, Res)
+    val cut = OverlayReference.cutBuilding(cellGeoms, buildings, grid, Res)
     assert(cut.where(col("id_build") === 7).select("id_grid").as[Int].collect().sorted.toSeq == Seq(1, 2))
     val rel = SpatialJoin.intersectsJoin(buildings.withColumnRenamed("the_geom", "__bg"), "__bg",
       cells.select(col("id_grid"), col("the_geom").as("__cg")), "__cg", grid, Res)

@@ -13,8 +13,10 @@ class RoofSpec extends SparkTestBase {
   test("reference goldens rsu1 + rsu13 + density sums") {
     val b = GeoFixture.buildingDf(spark)
       .where(($"id_build" < 6 || ($"id_build" < 29 && $"id_build" > 26)) && $"id_rsu".isNotNull)
+    val geom = b.select("id_build", "the_geom", "height_wall", "height_roof")
     val out = RsuIndicators.roofAreaDistribution(GeoFixture.rsuDf(spark), b,
-      Seq(0, 10, 20, 30, 40, 50), grid, 10)
+      RsuIndicators.unitPairs(geom, GeoFixture.rsuDf(spark), "id_rsu", grid, 10),
+      RsuIndicators.buildingNeighbours(geom, grid, 10), Seq(0, 10, 20, 30, 40, 50))
     def row(id: Int) = out.where($"id_rsu" === id).head()
     def v(id: Int, n: String) = math.round(row(id).getAs[Double](n) * 100) / 100.0
 

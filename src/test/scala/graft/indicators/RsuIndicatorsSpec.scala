@@ -1,5 +1,6 @@
 package graft.indicators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.fixtures.GeoFixture
@@ -10,12 +11,22 @@ class RsuIndicatorsSpec extends SparkTestBase {
   val grid = CellGrid.fixture
   val Res = 10
 
+  private def facadeDistribution(building: DataFrame): DataFrame = {
+    val b = building.select("id_build", "the_geom", "height_wall")
+    val rsu = GeoFixture.rsuDf(spark)
+    RsuIndicators.projectedFacadeAreaDistribution(b, RsuIndicators.buildingNeighbours(b, grid, Res),
+      RsuIndicators.unitPairs(b, rsu, "id_rsu", grid, Res), rsu, Seq(0, 10, 20, 30, 40, 50),
+      numDirection = 4)
+  }
+  private def roofFractions(rsu: DataFrame, building: DataFrame): DataFrame =
+    RsuIndicators.roofFractionDistributionExact(rsu,
+      RsuIndicators.unitPairs(building.select("the_geom", "height_roof"), rsu, "id_rsu", grid, Res)
+        .withColumn("area", graft.geom.GeoFunctions.stIntersectionArea(col("unit_geom"), col("the_geom"))),
+      Seq((0.0, 10.0), (10.0, 20.0)))
+
   test("projected facade area distribution: reference goldens (rsu1, buildings 1-5, nDir=4)") {
     import spark.implicits._
-    val b = GeoFixture.buildingDf(spark).where($"id_build" < 6)
-    val rsu = GeoFixture.rsuDf(spark)
-    val out = RsuIndicators.projectedFacadeAreaDistribution(b, rsu, grid, Res,
-      Seq(0, 10, 20, 30, 40, 50), numDirection = 4)
+    val out = facadeDistribution(GeoFixture.buildingDf(spark).where($"id_build" < 6))
     val r1 = out.where($"id_rsu" === 1).head()
     def v(n: String) = math.round(r1.getAs[Double](n) * 100) / 100.0
     // RsuIndicatorsTests.groovy projectedFacadeAreaDistributionTest golden
@@ -29,9 +40,7 @@ class RsuIndicatorsSpec extends SparkTestBase {
 
   test("projected facade area distribution: empty building set -> all zeros") {
     import spark.implicits._
-    val b = GeoFixture.buildingDf(spark).where($"id_build" < 1)
-    val out = RsuIndicators.projectedFacadeAreaDistribution(b, GeoFixture.rsuDf(spark),
-      grid, Res, Seq(0, 10, 20, 30, 40, 50), numDirection = 4)
+    val out = facadeDistribution(GeoFixture.buildingDf(spark).where($"id_build" < 1))
     val r1 = out.where($"id_rsu" === 1).head()
     (1 until r1.length).foreach(i => assert(r1.getDouble(i) == 0.0))
   }
@@ -87,8 +96,7 @@ class RsuIndicatorsSpec extends SparkTestBase {
   test("roofFractionDistributionExact: building areas attributed to height layers") {
     val rsu = GeoFixture.rsuDf(spark).where(col("id_rsu") === 1)
     val b = GeoFixture.buildingDf(spark).where(col("id_build") <= 8)
-    val out = RsuIndicators.roofFractionDistributionExact(rsu, b,
-      Seq((0.0, 10.0), (10.0, 20.0)), grid, Res).head()
+    val out = roofFractions(rsu, b).head()
     // rsu1 buildings (clipped = full): areas 156,40,100,180,130,75 w/ roofs 8,13,14,8,12,4
     // layer 0-10: 156+180+75=411; layer 10-20: 40+100+130=270; total 681
     assert(math.abs(out.getAs[Double]("roof_fraction_distribution_h0_10") - 411.0 / 681) < 1e-9)
@@ -102,8 +110,7 @@ class RsuIndicatorsSpec extends SparkTestBase {
       .select(col("id_rsu"), geom.as("the_geom"))
     val b = Seq(("POLYGON ((10 0, 20 0, 20 10, 10 10, 10 0))", 8.0)).toDF("wkt", "height_roof")
       .select(geom.as("the_geom"), col("height_roof"))
-    val out = RsuIndicators.roofFractionDistributionExact(rsu, b,
-      Seq((0.0, 10.0), (10.0, 20.0)), grid, Res).collect()
+    val out = roofFractions(rsu, b).collect()
     assert(out.length == 1)
     assert(out.head.getAs[Double]("roof_fraction_distribution_h0_10") == 0.0)
     assert(out.head.getAs[Double]("roof_fraction_distribution_h10_20") == 0.0)

@@ -59,7 +59,8 @@ class SvfSpec extends SparkTestBase {
   test("groundSkyViewFactor: empty-building RSU averages to 1.0") {
     val rsu = Seq((1, Geo.toWkb(Geo.box(0, 0, 100, 100)))).toDF("id_rsu", "the_geom")
     val bld = Seq.empty[(Array[Byte], Double)].toDF("the_geom", "height_wall")
-    val out = Svf.groundSkyViewFactor(rsu, bld, CellGrid.fixture, 10,
+    val pairs = RsuIndicators.unitPairs(bld, rsu, "id_rsu", CellGrid.fixture, 10)
+    val out = Svf.groundSkyViewFactor(rsu, pairs, bld, CellGrid.fixture, 10,
       pointDensity = 0.002, rayLength = 100.0, numberOfDirection = 8)
     val r = out.collect().map(r => (r.getInt(0), r.getDouble(1)))
     assert(r.toSeq == Seq((1, 1.0))) // no walls in range -> no scored points -> 1

@@ -55,11 +55,25 @@ class BdTopoSpec extends SparkTestBase {
     val z = broadcast(commune.select(col("the_geom").as("__cg")))
     df.crossJoin(z).where(G.stIntersects(col("__cg"), col("the_geom"))).drop("__cg")
   }
-  private def communeEnv = commune.select(G.stEnvelope(col("the_geom")).as("the_geom"))
+  private def communeEnv = commune.select(G.stMakeBox(G.stXMin(col("the_geom")),
+    G.stYMin(col("the_geom")), G.stXMax(col("the_geom")), G.stYMax(col("the_geom"))).as("the_geom"))
+  /** The line-layer clip to the zone (BDTopoV2Workflow queryMapper: `&& +
+    * ST_INTERSECTS` keep, contained kept verbatim, the rest clipped to the
+    * line components of the intersection). */
+  private def clipLinesToZone(raw: org.apache.spark.sql.DataFrame, zone: org.apache.spark.sql.DataFrame) = {
+    val z = broadcast(zone.select(col("the_geom").as("__zg")))
+    raw.crossJoin(z)
+      .where(G.stIntersects(col("__zg"), col("the_geom")))
+      .withColumn("the_geom",
+        when(G.stContains(col("__zg"), col("the_geom")), col("the_geom"))
+          .otherwise(G.stLines(G.stIntersection(col("the_geom"), col("__zg")))))
+      .where(!G.stIsEmpty(col("the_geom")))
+      .drop("__zg")
+  }
 
   test("roads: nature switch, crossings, widths (reference invariants)") {
     val out = BdTopo.formatRoadLayer(
-      BdTopo.clipLinesToZone(polygonFiltered(BdTopo.loadRoads(spark, dir)), communeEnv)
+      clipLinesToZone(polygonFiltered(BdTopo.loadRoads(spark, dir)), communeEnv)
         .withColumn("id_zone", lit(1)), "id_zone")
       .localCheckpoint()
     val n = out.count()
@@ -80,7 +94,7 @@ class BdTopoSpec extends SparkTestBase {
 
   test("rails, water, vegetation: dictionary formatting invariants") {
     val rails = BdTopo.formatRailsLayer(
-      BdTopo.clipLinesToZone(polygonFiltered(BdTopo.loadRails(spark, dir)), communeEnv)
+      clipLinesToZone(polygonFiltered(BdTopo.loadRails(spark, dir)), communeEnv)
         .withColumn("id_zone", lit(1)), "id_zone")
       .localCheckpoint()
     assert(rails.count() > 0)
